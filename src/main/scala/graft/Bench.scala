@@ -13,58 +13,11 @@ import org.apache.spark.sql.SparkSession
   * blind. A child JVM pays its own Spark/session startup, but that
   * cost is OUTSIDE the measured window: the child warms up, then
   * times only the query action, and reports that number on a marker
-  * line the parent parses.
-  *
-  * `SPARK_GRAFT_BENCH_INPROC=1` restores the old single-JVM loop
-  * (fast local iteration); `--one <name>` is the child entrypoint.
+  * line the parent parses. `--one <name>` is the child entrypoint.
   */
 object Bench {
 
   private val Marker = "GRAFT_BENCH_ONE "
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val threads =
-      if (cpus == "*") Runtime.getRuntime.availableProcessors() else cpus.toInt
-    val base = Engine.shufflePartitionsOverride.getOrElse(32)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Deployment knob (see Engine.session): manual override wins;
-      // otherwise a heap-starved child (SPARK_GRAFT_CHILD_XMX) derives
-      // a wider AQE starting point so per-task shuffle shares fit —
-      // the memory-bounded sf10 rehearsal runs at default config now.
-      .config("spark.sql.shuffle.partitions", base.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing byte floor (Engine.coalesceMinPartitionSize):
-      // byte-blind coalescing serialized the compute-dense pair
-      // stages onto 4 tasks at sf0.1 — see Engine for the full note
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        Engine.coalesceMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // heap-aware reader batch (Engine.readerBatchRows): a 4 GB
-      // stress child reading giant-document batches dies in the
-      // vectorized reader's contiguous reserve at the default 4096
-      .config("spark.sql.parquet.columnarReaderBatchSize",
-        Engine.readerBatchRows(threads).toString)
-      // and the scan-concurrency floor (Engine.scanMinPartitions):
-      // 32 concurrent giant-bearing readers exhaust a 4 GB heap on
-      // untracked vector memory alone — with its split-size ceiling
-      // companion (Engine.scanMaxPartitionBytes), or the floor is a
-      // no-op past (threads/4)*128MB tables (ADVICE r17)
-      .config("spark.sql.files.minPartitionNum",
-        Engine.scanMinPartitions(threads).toString)
-      .config("spark.sql.files.maxPartitionBytes",
-        Engine.scanMaxPartitionBytes(threads).toString)
-      .config("spark.ui.enabled", "false")
-    if (Engine.shufflePartitionsOverride.isEmpty) {
-      builder.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Engine.initialShufflePartitions(threads, base).toString)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Warmup: session init, parquet footer reads, codegen paths. */
   private def warmup(spark: SparkSession, sfDir: String): Unit = {
@@ -117,7 +70,7 @@ object Bench {
     * marker line for the parent. */
   private def runChild(name: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val spark = Engine.session("graft-bench", Engine.cores("32"))
     warmup(spark, sfDir)
     // any-success semantics (the assemble_mem_board discipline, ADVICE
     // r17): an error in one rerun must not discard a valid measurement
@@ -145,9 +98,9 @@ object Bench {
   }
 
   /** Fork a child JVM for `name` with this JVM's flags + classpath and
-    * parse its marker line. Returns (seconds, ok). The ONE home of the
-    * marker protocol — [[BenchScale]] calls this too (r14's declared
-    * debt was a drifting copy there).
+    * parse its marker line. Returns (seconds, ok, failed attempts; 0
+    * when the marker predates the `fails` field). The ONE home of the
+    * marker protocol — [[BenchScale]] calls this too.
     *
     * @param env        extra child environment (e.g. SPARK_GRAFT_SF_DIR
     *                   to point the child at a synthesized scale dir)
@@ -160,15 +113,6 @@ object Bench {
     * memory-bounded rehearsal caps children at a realistic per-task
     * executor share without re-plumbing the run scripts. */
   private[graft] def forkOne(name: String, env: Map[String, String] = Map.empty,
-                             timeoutMin: Long = 15,
-                             tag: String = "bench"): (Double, Boolean) =
-    forkOneCounted(name, env, timeoutMin, tag) match {
-      case (sec, ok, _) => (sec, ok)
-    }
-
-  /** [[forkOne]] plus the child's failed-attempt count (0 when the
-    * marker predates the `fails` field). */
-  private[graft] def forkOneCounted(name: String, env: Map[String, String] = Map.empty,
                              timeoutMin: Long = 15,
                              tag: String = "bench"): (Double, Boolean, Int) = {
     import scala.jdk.CollectionConverters._
@@ -215,7 +159,6 @@ object Bench {
     if (args.length == 2 && args(0) == "--one") { runChild(args(1)); return }
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val inproc = sys.env.get("SPARK_GRAFT_BENCH_INPROC").contains("1")
     val only = args.toSet
     val selected =
       if (only.isEmpty) SparkEntry.queries.keys.toSeq.sorted
@@ -227,26 +170,12 @@ object Bench {
     // of the one-line per-key map and BOTH rounds' driver comparisons
     // came back empty (VERDICT r18 issue 1).
     val KeyMarker = "GRAFT_BENCH_KEY "
-    def emitKey(name: String, sec: Double, ok: Boolean, fails: Int): Unit =
+    val results = selected.map { name =>
+      val (sec, ok, fails) = forkOne(name)
       if (only.isEmpty)
         println(s"""$KeyMarker{"query":"$name","sec":$sec,"ok":$ok,"fails":$fails}""")
-
-    val results =
-      if (inproc) {
-        val spark = session()
-        warmup(spark, sfDir)
-        val rs = selected.map { name =>
-          val (sec, ok) = timeOne(spark, sfDir, name)
-          emitKey(name, sec, ok, if (ok) 0 else 1)
-          (name, sec, ok, if (ok) 0 else 1)
-        }
-        spark.stop()
-        rs
-      } else selected.map { name =>
-        val (sec, ok, fails) = forkOneCounted(name)
-        emitKey(name, sec, ok, fails)
-        (name, sec, ok, fails)
-      }
+      (name, sec, ok, fails)
+    }
 
     // A query with no valid timing (crash / 15-min fork timeout) counts
     // as the timeout ceiling, never 0 — a hung query must make the
@@ -259,7 +188,9 @@ object Bench {
       .mkString("{", ",", "}")
     val errs = cleaned.collect { case (k, _, false, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val flaky = cleaned.collect { case (k, _, _, f) if f > 0 => "\"" + k + "\"" }
+    // flaky = succeeded on some attempt but failed on another; a key
+    // that never succeeded is an error, not a flake
+    val flaky = cleaned.collect { case (k, _, true, f) if f > 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = cleaned.map(_._2).sum
     val validTotal = cleaned.collect { case (_, v, true, _) => v }.sum
@@ -267,10 +198,10 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","valid_total":$validTotal,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     println(line)
     // Compact summary LAST (no per-key map, ~150 chars): the one line
-    // guaranteed to survive any tail capture intact. The full-contract
-    // line above is UNCHANGED (every historical board parses the same
-    // way); this line only repeats its scalars.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","valid_total":$validTotal,""" +
+    // guaranteed to survive any tail capture intact. It only repeats
+    // the scalars of the full line above, under its own metric name so
+    // the full line stays the only "total" record.
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","valid_total":$validTotal,""" +
       s""""n_queries":${cleaned.size},"errors":$errs,"flaky":$flaky,"sf":"$sfDir"}""")
     // Persist the FULL artifact ourselves: the driver's committed
     // BENCH_r*.json files truncate to a 2000-char tail, cutting the
@@ -282,8 +213,7 @@ object Bench {
     if (only.isEmpty) {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
       val stamp = java.time.Instant.now().toString
-      val mode = if (inproc) "inproc" else "forked"
-      val full = s"""{"written_at":"$stamp","mode":"$mode","runs_per_key":$runsPerKey,""" +
+      val full = s"""{"written_at":"$stamp","mode":"forked","runs_per_key":$runsPerKey,""" +
         s""""n_queries":${cleaned.size},""" +
         s""""metric":"total","value":$total,"unit":"sec","valid_total":$validTotal,""" +
         s""""queries":$qs,"errors":$errs,"flaky":$flaky,"sf":"$sfDir"}"""

@@ -48,13 +48,6 @@ object BenchScale {
     3.0 -> "/tmp/graft_scale/sf3",
     10.0 -> "/tmp/graft_scale/sf10")
 
-  /** One forked (key, scale) measurement — [[Bench.forkOne]] owns the
-    * child protocol; this only supplies the scale dir and the wider
-    * 20-minute ceiling sf10 children need. */
-  private def forkOne(name: String, sfDir: String): (Double, Boolean) =
-    Bench.forkOne(name, env = Map("SPARK_GRAFT_SF_DIR" -> sfDir),
-      timeoutMin = 20, tag = s"bench-scale $sfDir")
-
   /** Least-squares slope of log(t) vs log(s) over the given points. */
   def fitExponent(pts: Seq[(Double, Double)]): Double = {
     val ls = pts.map { case (s, t) => (math.log(s), math.log(t)) }
@@ -81,7 +74,9 @@ object BenchScale {
 
     val rows = for (k <- keys) yield {
       val times = for ((s, dir) <- scales) yield {
-        val (sec, ok) = forkOne(k, dir)
+        // sf10 children need a wider ceiling than the headline board
+        val (sec, ok, _) = Bench.forkOne(k, env = Map("SPARK_GRAFT_SF_DIR" -> dir),
+          timeoutMin = 20, tag = s"bench-scale $dir")
         System.err.println(f"[bench-scale] $k%-24s sf$s%-4s ${sec}%8.2f s ok=$ok")
         (s, sec, ok)
       }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 
 /** Independent grading for d23 (embedding dup clusters) at scales the
   * DuckDB twin cannot reach (VERDICT r16 item #3: the oracle's
@@ -45,19 +45,7 @@ object ClusterCheck {
     require(args.length >= 2, "usage: graft.ClusterCheck <sfDir> <outJson> [sampleClusters]")
     val (sfDir, outPath) = (args(0), args(1))
     val nSample = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val threads =
-      if (cpus == "*") Runtime.getRuntime.availableProcessors() else cpus.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        Engine.shufflePartitionsOverride.getOrElse(threads).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-cluster-check", Engine.cores("32"))
 
     // d23's exact pair plan (TextSim.scala d23_embed_clusters): same
     // threshold/rounding discipline, then the same CC machinery.

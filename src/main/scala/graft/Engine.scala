@@ -176,6 +176,13 @@ object Engine {
       df.localCheckpoint(false, s))
   }
 
+  /** Core count for a standalone main: `SPARK_GRAFT_CPUS` (a count or
+    * "*") when set, else that main's own default. The one place the
+    * knob is read; [[session]] resolves "*". */
+  def cores(default: String): String = sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+
+  /** The one SparkSession builder in graft: every main, spec and
+    * benchmark runs on this configuration. */
   def session(appName: String = "graft", cores: String = "*"): SparkSession = {
     val threads =
       if (cores == "*") Runtime.getRuntime.availableProcessors() else cores.toInt

@@ -242,14 +242,7 @@ object ScaleData {
         case other => throw new IllegalArgumentException(s"unknown flag '$other'; $usage")
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-scale-data", Engine.cores("32"))
     scaleTables(spark, src, out, copiesS.toInt, hot, zipf)
     spark.stop()
   }

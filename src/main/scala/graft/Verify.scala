@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,22 +10,9 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // '*' is accepted everywhere the knob is read (Engine.session,
-    // Bench) — resolve it here too instead of crashing on toInt
-    val threads =
-      if (cpus == "*") Runtime.getRuntime.availableProcessors() else cpus.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // partitions default to the thread count; the partition-count
-      // invariance gate overrides them independently (validated knob)
-      .config("spark.sql.shuffle.partitions",
-        Engine.shufflePartitionsOverride.getOrElse(threads).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local[4] by default: the graded sf0.01 contract; the partition
+    // invariance gate varies SPARK_GRAFT_CPUS / _SHUFFLE_PARTITIONS
+    val spark = Engine.session("graft-verify", Engine.cores("4"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

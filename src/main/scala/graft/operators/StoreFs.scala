@@ -27,6 +27,22 @@ object StoreFs {
     if (f.exists(p)) f.listStatus(p).toSeq.map(_.getPath) else Seq.empty
   }
 
+  /** Identity of a directory tree's current contents: (file count,
+    * Σ bytes, Σ mtime) over every file under `path`, or "absent".
+    * Driver FS metadata only, no Spark job. Driver-side caches of
+    * index data (ANN quantizers, the s18 export guard) key on it, so
+    * any rewrite of the tree forces a re-read. */
+  def fingerprint(spark: SparkSession, path: String): String = {
+    val (f, p) = fs(spark, path)
+    if (!f.exists(p)) return "absent"
+    var n = 0L; var bytes = 0L; var mt = 0L
+    val it = f.listFiles(p, true)
+    while (it.hasNext) {
+      val s = it.next(); n += 1; bytes += s.getLen; mt += s.getModificationTime
+    }
+    s"$n-$bytes-$mt"
+  }
+
   /** Write a small text file (overwrite) — sidecar metadata like the
     * near-dedup index params. Driver-side, O(bytes). */
   def writeText(spark: SparkSession, path: String, content: String): Unit = {

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExpressions
 
@@ -33,39 +33,34 @@ object Similarity {
   }
 
   /** Driver-resident quantizer metadata (centroid rows / codebooks /
-    * rotation), keyed by table path + a filesystem fingerprint (file
-    * count, Σ bytes, Σ mtime) of that table's directory — the serving
-    * posture every ANN deployment runs (FAISS holds its coarse
-    * quantizer in process memory; re-reading nCells rows through a
-    * scheduled single-task job on EVERY query is pure per-query
-    * overhead, r19 event-log evidence in OPTIMIZATION_r19.md). The
-    * fingerprint makes this a pure read-through cache of IMMUTABLE
-    * index metadata, never of results: quantizers are frozen at build
-    * time (adds/deletes/compactions touch codes/cells/tombstones
-    * only), and any rewrite of the metadata table changes its
-    * fingerprint and forces a re-read. Entries are O(nCells·dims)
-    * doubles — bounded by the declared metadata contract. */
+    * rotation): one (fingerprint, value) entry per metadata table
+    * path, where the fingerprint is [[graft.operators.StoreFs.fingerprint]]
+    * of that table's directory — the serving posture every ANN
+    * deployment runs (FAISS holds its coarse quantizer in process
+    * memory; re-reading nCells rows through a scheduled single-task
+    * job on EVERY query is pure per-query overhead, r19 event-log
+    * evidence in OPTIMIZATION_r19.md). The fingerprint makes this a
+    * pure read-through cache of IMMUTABLE index metadata, never of
+    * results: quantizers are frozen at build time (adds/deletes/
+    * compactions touch codes/cells/tombstones only), and any rewrite
+    * of the metadata table changes its fingerprint, which re-reads
+    * the table and REPLACES the path's entry — a rebuild at the same
+    * path never leaves the old O(nCells·dims) value behind. */
   private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, AnyRef)]()
 
-  /** (file count, Σ bytes, Σ mtime) over a directory tree — driver
-    * FS metadata only, no Spark job (the TextSim.indexFingerprint
-    * discipline, through the Hadoop FS so non-local stores work). */
-  private def dirFingerprint(spark: SparkSession, path: String): String = {
-    val (f, p) = graft.operators.StoreFs.fs(spark, path)
-    if (!f.exists(p)) return "absent"
-    var n = 0L; var bytes = 0L; var mt = 0L
-    val it = f.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next(); n += 1; bytes += s.getLen; mt += s.getModificationTime
-    }
-    s"$n-$bytes-$mt"
+  /** Metadata table paths currently cached (spec visibility). */
+  private[graft] def metaCachePaths: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    metaCache.keySet.asScala.toSet
   }
 
   private def cachedMeta[T <: AnyRef](spark: SparkSession, path: String)
-                                     (load: => T): T =
-    metaCache.computeIfAbsent(s"$path#${dirFingerprint(spark, path)}",
-      _ => load).asInstanceOf[T]
+                                     (load: => T): T = {
+    val fp = graft.operators.StoreFs.fingerprint(spark, path)
+    metaCache.compute(path, (_, cur) =>
+      if (cur != null && cur._1 == fp) cur else (fp, load))._2.asInstanceOf[T]
+  }
 
   /** Centroid table rows (cell-ordered), via [[cachedMeta]]. */
   private def loadCentroidRows(spark: SparkSession,
@@ -87,24 +82,29 @@ object Similarity {
       }
     }
 
+  /** Collect a bounded table ONCE and re-create it as a
+    * LocalRelation: every later plan over it builds straight from
+    * driver memory, with no further job and no checkpoint blocks to
+    * release (ADVICE r18). Only for tables bounded by the
+    * broadcast-small queries contract (query sets, their top-k truth
+    * tables, probe tables). */
+  private[graft] def collectLocal(df: DataFrame): DataFrame =
+    localRelation(df, df.collect())
+
+  private def localRelation(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+
   /** Materialize a bounded probe table ONCE: a single collect yields
-    * both the probed rows — re-created as a LocalRelation, so the
-    * broadcast side of the cells join builds straight from driver
-    * memory with no further job and no lingering checkpoint blocks
-    * (ADVICE r18) — and the distinct probed cell list for the static
-    * partition filter. Bounded by the broadcast-small queries
-    * contract: these exact rows were already collected for the
-    * broadcast build; this collect adds no data movement, it removes
-    * an eager localCheckpoint job plus a separate distinct/collect
-    * job per serve. */
+    * both the probed rows — re-created as a LocalRelation, the
+    * broadcast side of the cells join — and the distinct probed cell
+    * list for the static partition filter. These exact rows were
+    * already collected for the broadcast build; this collect adds no
+    * data movement, it removes an eager localCheckpoint job plus a
+    * separate distinct/collect job per serve. */
   private def collectProbed(probed: DataFrame): (DataFrame, Array[Long]) = {
-    val spark = probed.sparkSession
     val rows = probed.collect()
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), probed.schema)
     val ci = probed.schema.fieldIndex("cell")
-    val cells = rows.map(_.getAs[Number](ci).longValue).distinct
-    (local, cells)
+    (localRelation(probed, rows), rows.map(_.getAs[Number](ci).longValue).distinct)
   }
 
   /** Sequential-fold dot product in double precision (native). */
@@ -157,13 +157,15 @@ object Similarity {
     * and a skew-heavy query (one probe bucket holding half the
     * corpus) no longer serializes on a single reducer sort. */
   private def rankTopK(scored: DataFrame, k: Int,
-                       simCol: String = "sim"): DataFrame =
+                       simCol: String = "sim", by: Seq[String] = Nil): DataFrame = {
+    val keys = (by :+ "q_id").map(col)
     scored
-      .groupBy(col("q_id"))
+      .groupBy(keys: _*)
       .agg(graft.functions.CollectMinK.collectMinK(
         struct(negate(col(simCol)).as("ns"), col("n_id").as("n_id")), k).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")))
-      .select(col("q_id"), (col("pos") + 1).as("rank"), col("col.n_id").as("n_id"))
+      .select(keys :+ posexplode(col("__top")): _*)
+      .select(keys ++ Seq((col("pos") + 1).as("rank"), col("col.n_id").as("n_id")): _*)
+  }
 
   /** Index-quality evaluation: per-query recall of an approximate
     * top-k result set against the exact one — the acceptance gate an
@@ -178,16 +180,18 @@ object Similarity {
     *
     * Shape: one (q_id, n_id)-keyed left join + one q_id groupBy —
     * fixed-width key shuffles over O(queries · k) rows; the vectors
-    * are never touched again. */
+    * are never touched again. `by` columns (present on both sides)
+    * grade several approx result sets at once, e.g. the nprobe
+    * points of [[ivfSearchSweep]]. */
   def recallAtK(exact: DataFrame, approx: DataFrame,
-                qCol: String = "q_id", nCol: String = "n_id"): DataFrame = {
-    val e = exact.select(col(qCol).cast("long").as("q_id"),
-      col(nCol).cast("long").as("n_id"))
-    val a = approx.select(col(qCol).cast("long").as("q_id"),
-        col(nCol).cast("long").as("n_id"))
-      .distinct().withColumn("__hit", lit(1L))
-    e.join(a, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
+                qCol: String = "q_id", nCol: String = "n_id",
+                by: Seq[String] = Nil): DataFrame = {
+    def ids(df: DataFrame) = df.select(by.map(col) ++ Seq(
+      col(qCol).cast("long").as("q_id"), col(nCol).cast("long").as("n_id")): _*)
+    val keys = by :+ "q_id"
+    ids(exact).join(ids(approx).distinct().withColumn("__hit", lit(1L)),
+        keys :+ "n_id", "left")
+      .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hit"))
       .withColumn("recall", col("n_hit") / col("n_exact"))
   }
@@ -454,36 +458,28 @@ object Similarity {
     ivfScore(corpusCells, probed, k)
   }
 
-  /** One-pass nprobe SWEEP over a persisted IVF index: per sweep
-    * point np, the result is BIT-IDENTICAL to
-    * `ivfSearch(..., nprobe = np)` (spec-asserted), but the index is
-    * probed/scanned ONCE at max(nprobes) instead of once per point.
+  /** One-pass nprobe SWEEP over a persisted IVF index: one table
+    * (nprobe, q_id, rank, n_id) whose rows at each sweep point np are
+    * BIT-IDENTICAL to `ivfSearch(..., nprobe = np)` (spec-asserted),
+    * but the index is probed/scanned ONCE at max(nprobes) instead of
+    * once per point.
     *
     * Why identical: [[probeQueries]] at nprobe = np takes the first
     * np elements of the SAME deterministic sort
     * (array_sort of (−score, cell) structs — ties break on the cell
     * index), so "probe rank < np" over the max-nprobe probe list
     * selects exactly ivfSearch(np)'s probed cells; each corpus
-    * vector lives in exactly one cell, so filtering the scored
-    * candidates by probe rank reproduces exactly ivfSearch(np)'s
-    * candidate set, and the ranking pipeline below is [[ivfScore]]
-    * verbatim. The scored candidate table (O(queries · probed-cell
-    * members) rows, fixed width) is localCheckpoint'd so the per-np
-    * rankings are bounded re-aggregations, not re-scans — a 4-point
-    * tuning sweep (s17) pays one cells read instead of four.
+    * vector lives in exactly one cell, so tagging each scored
+    * candidate with every point np above its probe rank reproduces
+    * exactly ivfSearch(np)'s candidate set per point, and the ranking
+    * below is [[ivfScore]]'s, grouped per (nprobe, q_id). All points
+    * come out of one aggregation over one cells read, so nothing is
+    * checkpointed and nothing outlives the query.
     *
     * Tuning sweeps run against a just-built index, between
     * compactions — tombstones are still dropped (parity with
     * [[ivfSearch]]) but `allowed` filtering is not offered here;
     * filtered serving goes through ivfSearch.
-    *
-    * Lifecycle (ADVICE r18): the returned DataFrames all read the one
-    * localCheckpoint'd scored pass, so they hold its blocks alive
-    * until they are garbage-collected — consume the sweep points and
-    * drop the references; a long-lived session that keeps sweep
-    * outputs around keeps their checkpoint too. (The probe table no
-    * longer checkpoints at all — it is collected once and re-created
-    * as a LocalRelation, r19.)
     *
     * Precondition (ADVICE r18): bit-identity per point relies on every
     * n_id living in exactly ONE cell, which a just-built or compacted
@@ -494,7 +490,7 @@ object Similarity {
     * per-np results could diverge from per-nprobe [[ivfSearch]]. */
   def ivfSearchSweep(queries: DataFrame, qId: String, vecCol: String,
                      indexPath: String, k: Int,
-                     nprobes: Seq[Int]): Seq[(Int, DataFrame)] = {
+                     nprobes: Seq[Int]): DataFrame = {
     require(nprobes.nonEmpty, "ivfSearchSweep: at least one nprobe point")
     val spark = queries.sparkSession
     recoverIndex(spark, indexPath)
@@ -510,19 +506,16 @@ object Similarity {
     val corpusCells = dropTombstones(spark, indexPath,
       spark.read.parquet(s"$indexPath/cells")
         .filter(col("cell").isin(probeCells.toSeq: _*)))
+    val points = typedLit(nprobes.distinct)
     val scored = corpusCells
       .join(broadcast(probed), "cell")
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
         (dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn"))).as("sim"),
-        col("__pp"))
-      .localCheckpoint() // one probe pass feeds every sweep point
-    nprobes.map { np =>
-      np -> rankTopK(
-        scored.filter(col("__pp") < np)
-          .select(col("q_id"), col("n_id"), col("sim"))
-          .dropDuplicates("q_id", "n_id"), k)
-    }
+        // a candidate from the probe-rank-p cell is probed at every np > p
+        explode(filter(points, np => np > col("__pp"))).as("nprobe"))
+      .dropDuplicates("nprobe", "q_id", "n_id")
+    rankTopK(scored, k, by = Seq("nprobe"))
   }
 
   /** Metadata-FILTERED search support (the FAISS-IDSelector /

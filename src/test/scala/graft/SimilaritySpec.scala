@@ -154,12 +154,12 @@ class SimilaritySpec extends SparkSpec {
     Similarity.ivfBuild(emb, "vec_id", "embedding", dir)
     val points = Seq(1, 2, 4, 8)
     val sweep = Similarity.ivfSearchSweep(q, "vec_id", "embedding", dir,
-      k = 10, nprobes = points).toMap
+      k = 10, nprobes = points)
     points.foreach { np =>
       val single = Similarity.ivfSearch(q, "vec_id", "embedding", dir,
           k = 10, nprobe = np)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val swept = sweep(np)
+      val swept = sweep.filter(col("nprobe") === np).select("q_id", "rank", "n_id")
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(swept === single, s"sweep point nprobe=$np diverges from ivfSearch")
     }
@@ -750,5 +750,44 @@ class SimilaritySpec extends SparkSpec {
       Similarity.indexStats(spark,
         java.nio.file.Files.createTempDirectory("graft_not_idx2").toString)
     }
+  }
+
+  test("metaCache keeps one entry per metadata path across ivfpq rebuilds at one path") {
+    // Rebuilding at a path must REPLACE the path's cached quantizers,
+    // not add a fingerprint-suffixed entry beside the stale one. Each
+    // round rebuilds with a different corpus and cell count; its search
+    // must match a build of the same corpus at a fresh, never-cached
+    // path, so no stale centroids, codebooks or rotation are served.
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfpq_rebuild").toString
+    val idx = s"$root/idx"
+    val q = emb.filter(col("vec_id") < 5)
+    def search(path: String, nCells: Int) = Similarity
+      .ivfpqSearch(q, "vec_id", "embedding", path, k = 5, nprobe = nCells, rerank = 1)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    Seq(4, 8, 16).zipWithIndex.foreach { case (nCells, round) =>
+      val corpus = emb.filter(col("vec_id") % 3 =!= round)
+      Similarity.ivfpqBuild(corpus, "vec_id", "embedding", idx, nCells = nCells, rotate = true)
+      Similarity.ivfpqBuild(corpus, "vec_id", "embedding", s"$root/ref$round",
+        nCells = nCells, rotate = true)
+      assert(search(idx, nCells) === search(s"$root/ref$round", nCells),
+        s"rebuild $round served stale quantizer metadata")
+      val entries = Similarity.metaCachePaths.filter(_.startsWith(s"$idx/"))
+      assert(entries.size <= 3, s"rebuild $round: cache grew to $entries")
+    }
+    assert(Similarity.metaCachePaths.filter(_.startsWith(s"$idx/")) ===
+      Set("centroids", "codebooks", "rotation").map(t => s"$idx/$t"))
+  }
+
+  test("s16/s17 on a warm index cache leave no persisted RDD behind") {
+    // the 10-row query set and s17's truth pass used to be
+    // localCheckpoint'd and never released — one leaked block set per
+    // serve in a long-lived session
+    val sf001 = new java.io.File(sf).getParent + "/sf0.01"
+    val keys = Seq("s16_ann_recall", "s17_ann_tuning")
+    keys.foreach(k => graft.SparkEntry.queries(k)(spark, sf001).collect()) // warm the index cache
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    keys.foreach(k => graft.SparkEntry.queries(k)(spark, sf001).collect())
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs still persisted after s16/s17: $leaked")
   }
 }
