@@ -323,9 +323,7 @@ object Cli {
           // partition overwrite below only rewrites partitions present
           // in the data, so leftover junk partitions would otherwise
           // survive into the swapped store (lease-drill-caught)
-          val (fs, tmpP) = graft.operators.StoreFs.fs(spark, tmp)
-          if (fs.exists(tmpP) && !fs.delete(tmpP, true))
-            throw new java.io.IOException(s"failed to clear stale $tmp")
+          graft.operators.StoreFs.delete(spark, tmp)
           TrendStoreWriter.write(
             TrendStoreWriter.read(spark, path).drop("p_date"), tmp, clusterBy = by)
           graft.operators.StoreFs.replace(spark, tmp, path)

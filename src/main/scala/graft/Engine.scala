@@ -205,6 +205,8 @@ object Engine {
       .config("spark.sql.files.maxPartitionBytes",
         scanMaxPartitionBytes(threads).toString)
       .config("spark.ui.enabled", "false")
+      // in-JVM chmod for file:// writes (see LocalFs)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.operators.LocalFs].getName)
     // Manual override wins outright (the documented sizing escape);
     // otherwise a heap-starved JVM starts its shuffles wider and lets
     // AQE coalesce back down.

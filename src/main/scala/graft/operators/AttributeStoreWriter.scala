@@ -117,14 +117,7 @@ object AttributeStoreWriter {
       // data, so dynamic overwrite leaves its stale files — drop those
       // partitions explicitly (checked deletes, as in retain).
       val emptied = dirtyRows.filter(_.getBoolean(2)).map(_.getDate(0).toString)
-      if (emptied.nonEmpty) {
-        val (f, _) = StoreFs.fs(spark, historyPath)
-        emptied.foreach { d =>
-          val p = new org.apache.hadoop.fs.Path(s"$historyPath/p_date=$d")
-          if (f.exists(p) && !f.delete(p, true))
-            throw new java.io.IOException(s"failed to drop emptied partition $p")
-        }
-      }
+      emptied.foreach(d => StoreFs.delete(spark, s"$historyPath/p_date=$d"))
     }
     (dropped, dirtyDays)
   }

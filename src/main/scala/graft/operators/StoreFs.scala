@@ -31,16 +31,27 @@ object StoreFs {
     * Σ bytes, Σ mtime) over every file under `path`, or "absent".
     * Driver FS metadata only, no Spark job. Driver-side caches of
     * index data (ANN quantizers, the s18 export guard) key on it, so
-    * any rewrite of the tree forces a re-read. */
+    * any rewrite of the tree forces a re-read. Walks with `listStatus`:
+    * `listFiles` builds a `LocatedFileStatus` per file, which on
+    * file:// forks an `ls -ld` to load permissions this never reads. */
   def fingerprint(spark: SparkSession, path: String): String = {
     val (f, p) = fs(spark, path)
     if (!f.exists(p)) return "absent"
     var n = 0L; var bytes = 0L; var mt = 0L
-    val it = f.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next(); n += 1; bytes += s.getLen; mt += s.getModificationTime
+    def walk(d: Path): Unit = f.listStatus(d).foreach { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else { n += 1; bytes += s.getLen; mt += s.getModificationTime }
     }
+    walk(p)
     s"$n-$bytes-$mt"
+  }
+
+  /** Checked recursive delete: a no-op when `path` is absent, an
+    * `IOException` when it exists and cannot be removed. */
+  def delete(spark: SparkSession, path: String): Unit = {
+    val (f, p) = fs(spark, path)
+    if (f.exists(p) && !f.delete(p, true))
+      throw new java.io.IOException(s"failed to delete $path")
   }
 
   /** Write a small text file (overwrite) — sidecar metadata like the

@@ -374,11 +374,7 @@ object TextIndex {
     // a tmp left by a dead run would fail these default-mode writes
     // forever (and under dynamic overwrite could leak junk token
     // directories into the swap) — clear first
-    Seq(s"$path/postings.tmp", s"$path/doclen.tmp").foreach { tmp =>
-      val (fsys, tmpP) = StoreFs.fs(spark, tmp)
-      if (fsys.exists(tmpP) && !fsys.delete(tmpP, true))
-        throw new java.io.IOException(s"failed to clear stale $tmp")
-    }
+    Seq(s"$path/postings.tmp", s"$path/doclen.tmp").foreach(StoreFs.delete(spark, _))
     // tombstoned docs ([[deleteDocs]]) are PHYSICALLY removed here and
     // the tombstone table cleared — a crash in between leaves
     // already-purged ids harmlessly tombstoned (anti-join of an
@@ -396,9 +392,7 @@ object TextIndex {
     dedupDl.write.parquet(s"$path/doclen.tmp")
     StoreFs.replace(spark, s"$path/doclen.tmp", s"$path/doclen")
     if (hadTomb) {
-      val (f, p) = StoreFs.fs(spark, tombPath)
-      if (f.exists(p) && !f.delete(p, true))
-        throw new java.io.IOException(s"failed to clear $tombPath")
+      StoreFs.delete(spark, tombPath)
       writeStats(spark, path)
     }
   }

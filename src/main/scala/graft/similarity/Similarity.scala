@@ -867,7 +867,7 @@ object Similarity {
       book.zipWithIndex.map { case (cent, j) => (s, j, cent.toSeq) }
     }.toSeq.toDF("sub", "code", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebooks")
-    rot.foreach(writeRotation(spark, indexPath, _))
+    writeRotation(spark, indexPath, rot)
   }
 
   /** Search a persisted PQ index: codebooks are O(m·nCodes)
@@ -980,7 +980,7 @@ object Similarity {
       book.zipWithIndex.map { case (cent, j) => (s, j, cent.toSeq) }
     }.toSeq.toDF("sub", "code", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebooks")
-    rot.foreach(writeRotation(spark, indexPath, _))
+    writeRotation(spark, indexPath, rot)
   }
 
   /** Incrementally ADD vectors to a persisted IVF-PQ index — the
@@ -1108,9 +1108,7 @@ object Similarity {
       // partitionOverwriteMode=dynamic, the partitioned overwrite
       // below would otherwise keep a dead run's junk cell directories
       // and swap them into the index
-      val (fsys, tmpP) = StoreFs.fs(spark, tmp)
-      if (fsys.exists(tmpP) && !fsys.delete(tmpP, true))
-        throw new java.io.IOException(s"failed to clear stale $tmp")
+      StoreFs.delete(spark, tmp)
       if (df.schema.fieldNames.contains("cell"))
         df.repartition(nFiles, col("cell"))
           .write.partitionBy("cell").mode("overwrite").parquet(tmp)
@@ -1125,11 +1123,7 @@ object Similarity {
     val nCells = rewrite(s"$indexPath/cells")   // ivf
     rewrite(s"$indexPath/vectors")              // pq / ivfpq re-rank side
     // all data tables purged → the tombstones have no referent left
-    tomb.foreach { _ =>
-      val (f, p) = StoreFs.fs(spark, tombPath)
-      if (f.exists(p) && !f.delete(p, true))
-        throw new java.io.IOException(s"failed to clear $tombPath")
-    }
+    tomb.foreach(_ => StoreFs.delete(spark, tombPath))
     math.max(nCodes, nCells)
   }
 
@@ -1273,13 +1267,18 @@ object Similarity {
 
   /** The OPQ-lite rotation persisted with a PQ-coded index (absent ↔
     * the index quantizes unrotated vectors — search auto-detects,
-    * like the residual flag). */
+    * like the residual flag). An unrotated build deletes any rotation
+    * a previous build left at the same path. */
   private def writeRotation(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, rot: Array[Array[Double]]): Unit = {
+                            indexPath: String, rot: Option[Array[Array[Double]]]): Unit = {
     import spark.implicits._
-    rot.zipWithIndex.map { case (r, i) => (i, r.toSeq) }
-      .toSeq.toDF("i", "component")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/rotation")
+    val path = s"$indexPath/rotation"
+    rot match {
+      case None => graft.operators.StoreFs.delete(spark, path)
+      case Some(r) => r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }
+        .toSeq.toDF("i", "component")
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    }
   }
 
   private def loadRotation(spark: org.apache.spark.sql.SparkSession,

@@ -778,6 +778,30 @@ class SimilaritySpec extends SparkSpec {
       Set("centroids", "codebooks", "rotation").map(t => s"$idx/$t"))
   }
 
+  test("an unrotated rebuild at a rotated index's path drops the old rotation") {
+    // search auto-applies any rotation/ it finds, so a stale one would
+    // rotate queries against the new, unrotated codebooks
+    val root = java.nio.file.Files.createTempDirectory("graft_unrotate").toString
+    val q = emb.filter(col("vec_id") < 10)
+    def hits(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    Seq("ivfpq", "pq").foreach { kind =>
+      def build(path: String, rotate: Boolean): Unit =
+        if (kind == "pq") Similarity.pqBuild(emb, "vec_id", "embedding", path, rotate = rotate)
+        else Similarity.ivfpqBuild(emb, "vec_id", "embedding", path, rotate = rotate)
+      def search(path: String) = hits(
+        if (kind == "pq") Similarity.pqSearch(q, "vec_id", "embedding", path, k = 10, rerank = 1)
+        else Similarity.ivfpqSearch(q, "vec_id", "embedding", path, k = 10, nprobe = 16, rerank = 1))
+      val (idx, ref) = (s"$root/$kind", s"$root/${kind}_ref")
+      build(idx, rotate = true)
+      search(idx) // caches the rotation
+      build(idx, rotate = false)
+      build(ref, rotate = false)
+      assert(search(idx) === search(ref), s"$kind rebuild still applies the old rotation")
+      assert(!graft.operators.StoreFs.exists(spark, s"$idx/rotation"), kind)
+    }
+  }
+
   test("s16/s17 on a warm index cache leave no persisted RDD behind") {
     // the 10-row query set and s17's truth pass used to be
     // localCheckpoint'd and never released — one leaked block set per
