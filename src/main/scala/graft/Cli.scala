@@ -315,18 +315,11 @@ object Cli {
       val by = one(f, "by").split(",").map(_.trim).filter(_.nonEmpty).toSeq
       if (f.contains("store")) {
         val path = one(f, "store")
-        val tmp = path + ".clustering"
         // same single-writer lease as materialize/harvest: a rewrite
         // racing a store writer would swap away its partitions
         Materialize.withLease(spark, path + ".lease") {
-          // clear any stale tmp from a dead run FIRST: the dynamic
-          // partition overwrite below only rewrites partitions present
-          // in the data, so leftover junk partitions would otherwise
-          // survive into the swapped store (lease-drill-caught)
-          graft.operators.StoreFs.delete(spark, tmp)
-          TrendStoreWriter.write(
-            TrendStoreWriter.read(spark, path).drop("p_date"), tmp, clusterBy = by)
-          graft.operators.StoreFs.replace(spark, tmp, path)
+          graft.operators.StoreFs.rewrite(spark, path)(tmp => TrendStoreWriter.write(
+            TrendStoreWriter.read(spark, path).drop("p_date"), tmp, clusterBy = by))
         }
         println(s"cluster: store=$path by=${by.mkString(",")}")
       } else {
@@ -446,8 +439,7 @@ object Cli {
       val path = one(f, "index")
       val ids = spark.read.parquet(one(f, "ids"))
       val batch = f.get("batch").map(_.last)
-      val isText = graft.operators.StoreFs.exists(spark, s"$path/postings") &&
-        graft.operators.StoreFs.exists(spark, s"$path/stats.json")
+      val isText = graft.operators.IndexLog.layout(spark, path) == "text"
       val applied =
         if (isText) graft.operators.TextIndex.deleteDocs(spark, path, ids, batch)
         else graft.similarity.Similarity.annDelete(spark, path, ids, batch)
@@ -534,33 +526,27 @@ object Cli {
       println(s"dedup-incremental: method=${opt(f, "method", "exact")} survivors=$n")
 
     // Compact an incremental index (small-file tax) — dedup layouts
-    // (exact hash or near bands/sigs) and ANN layouts (ivf/pq/ivfpq)
-    // are auto-detected; --method pins one and mismatches are
-    // refused on both sides.
+    // (exact hash or near bands/sigs), ANN layouts (ivf/pq/ivfpq) and
+    // the text layout are auto-detected; --method pins one and each
+    // family's compactor refuses a layout that is not its own.
     case "compact-index" :: rest =>
       val f = parseFlags(rest)
       val path = one(f, "index")
-      val isAnn = Seq("codes", "cells", "centroids")
-        .exists(d => graft.operators.StoreFs.exists(spark, s"$path/$d"))
-      val isText = graft.operators.StoreFs.exists(spark, s"$path/postings") &&
-        graft.operators.StoreFs.exists(spark, s"$path/stats.json")
+      val layout = graft.operators.IndexLog.layout(spark, path)
       val method = opt(f, "method", "auto") match {
-        case "auto" => if (isAnn) "ann" else if (isText) "text" else "auto"
+        case "auto" if graft.operators.IndexLog.AnnLayouts(layout) => "ann"
+        case "auto" if layout == "text" => "text"
         case m => m
       }
-      val n =
-        if (method == "ann") {
-          require(isAnn, s"$path has no codes/ or cells/ table — " +
-            "not an ANN index (did you mean --method exact|near?)")
-          graft.similarity.Similarity.compactIndex(spark, path,
-            nFiles = opt(f, "files", "8").toInt)
-        } else if (method == "text") {
-          require(isText, s"$path has no postings/ + stats.json — " +
-            "not a text index (did you mean --method exact|near|ann?)")
+      val n = method match {
+        case "ann" => graft.similarity.Similarity.compactIndex(spark, path,
+          nFiles = opt(f, "files", "8").toInt)
+        case "text" =>
           graft.operators.TextIndex.compact(spark, path)
           spark.read.parquet(s"$path/postings").count()
-        } else Dedup.compactIndex(spark, path,
+        case _ => Dedup.compactIndex(spark, path,
           nFiles = opt(f, "files", "8").toInt, method = method)
+      }
       println(s"compact-index: rows=$n files=${opt(f, "files", "8")} " +
         s"method=$method")
 
@@ -681,13 +667,7 @@ object Cli {
       val path = one(f, "index")
       import graft.operators.StoreFs
       def ex(d: String) = StoreFs.exists(spark, s"$path/$d")
-      val layout =
-        if (ex("codes") && ex("centroids")) "ivfpq"
-        else if (ex("codes")) "pq"
-        else if (ex("cells")) "ivf"
-        else if (ex("bands") || ex("sigs")) "near"
-        else if (ex("postings") && ex("stats.json")) "text"
-        else "exact"
+      val layout = graft.operators.IndexLog.layout(spark, path)
       println(s"index-info: path=$path layout=$layout")
       layout match {
         case "text" =>

@@ -138,9 +138,7 @@ object AttributeStoreWriter {
                          tieCol: String = "event_id"): DataFrame = {
     val hist = readHistory(spark, historyPath).drop("p_date")
     val cur = AttributeStore.current(hist, col(entityCol), col(tsCol), col(tieCol))
-    val tmp = currentPath + ".tmp"
-    cur.write.mode("overwrite").parquet(tmp)
-    StoreFs.replace(spark, tmp, currentPath)
+    StoreFs.rewrite(spark, currentPath)(cur.write.mode("overwrite").parquet(_))
     spark.read.parquet(currentPath)
   }
 }

@@ -714,13 +714,12 @@ object Dedup {
     * appends one file set, so after months of daily batches the
     * probe joins open thousands of small parquet files — the classic
     * small-file tax (footer reads + task setup dominate the payload).
-    * Rewrites to `nFiles` files via the temp-then-swap discipline
-    * (StoreFs.replace): a crash mid-compact leaves either the old or
-    * the new table, never neither, and readers self-heal a torn swap
-    * via `recover`.
+    * Rewrites to `nFiles` files, each table swapped in by
+    * [[StoreFs.rewrite]] ([[IndexLog.compactTable]]).
     *
-    * Handles BOTH index layouts and refuses a mismatch (flattening a
-    * near index's `bands/`+`sigs/` subdirs through the exact path
+    * Handles BOTH dedup layouts ([[IndexLog.layout]]) and refuses a
+    * mismatch or any other index layout (flattening a near index's
+    * `bands/`+`sigs/` or an ANN index's subdirs through the exact path
     * would destroy it — and the post-swap .bak delete would make that
     * permanent):
     *  - exact (flat hash table): one rewrite; contents unchanged
@@ -735,28 +734,14 @@ object Dedup {
   def compactIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                    nFiles: Int = 8, method: String = "auto"): Long = {
     require(nFiles > 0, s"nFiles must be positive, got $nFiles")
-    def rewrite(path: String): Long = {
-      StoreFs.recover(spark, path)
-      if (!StoreFs.exists(spark, path)) return 0L
-      val tmp = path + ".compact.tmp"
-      spark.read.parquet(path).repartition(nFiles)
-        .write.mode("overwrite").parquet(tmp)
-      StoreFs.replace(spark, tmp, path)
-      spark.read.parquet(path).count()
-    }
-    StoreFs.recover(spark, indexPath)
-    // An ANN index (codes/cells/centroids subdirs) must go through
-    // Similarity.compactIndex — flattening it through the exact path
-    // here would destroy it, and the post-swap .bak delete would make
-    // that permanent (the same trap the bands/sigs guard closes).
-    require(!Seq("codes", "cells", "centroids")
-        .exists(d => StoreFs.exists(spark, s"$indexPath/$d")),
-      s"$indexPath has a persisted ANN-index layout — " +
-        "use Similarity.compactIndex (CLI: --method ann)")
-    val isNear = StoreFs.exists(spark, s"$indexPath/bands") ||
-      StoreFs.exists(spark, s"$indexPath/sigs")
+    def rewrite(table: String): Long = IndexLog.compactTable(spark, table, nFiles)
+    val layout = IndexLog.layout(spark, indexPath)
+    require(layout == "exact" || layout == "near",
+      s"$indexPath has a persisted $layout-index layout — use its own " +
+        "compactor (Similarity.compactIndex / TextIndex.compact; CLI: --method ann|text)")
+    val isNear = layout == "near"
     val effective = method match {
-      case "auto" => if (isNear) "near" else "exact"
+      case "auto" => layout
       case "exact" =>
         require(!isNear, s"$indexPath has a near-dedup bands/sigs layout; " +
           "compacting it as a flat exact index would destroy it — use method=near")

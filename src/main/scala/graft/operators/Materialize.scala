@@ -159,9 +159,7 @@ object Materialize {
       // State is tiny; rewrite via temp-then-swap on the Hadoop FS,
       // with the rename result checked (a silently failed rename would
       // leave stale state after the store already advanced).
-      val tmp = statePath + ".tmp"
-      newState.coalesce(1).write.mode("overwrite").parquet(tmp)
-      StoreFs.replace(spark, tmp, statePath)
+      StoreFs.rewrite(spark, statePath)(newState.coalesce(1).write.mode("overwrite").parquet(_))
     }
     dirtyDays
   }

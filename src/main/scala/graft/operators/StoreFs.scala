@@ -76,6 +76,19 @@ object StoreFs {
     } finally in.close()
   }
 
+  /** Rewrite the table or file at `path` crash-safely: heal a torn
+    * earlier swap, clear a stale `<path>.tmp` left by a dead run (a
+    * partitioned overwrite under dynamic partition-overwrite mode
+    * would otherwise keep its junk partitions), let `write` produce
+    * the new state at the tmp path, then [[replace]] it in. */
+  def rewrite(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    recover(spark, path)
+    val tmp = path + ".tmp"
+    delete(spark, tmp)
+    write(tmp)
+    replace(spark, tmp, path)
+  }
+
   /** Replace `dest` with `src` via a backup swap: the old `dest` is
     * renamed aside to `dest.bak` BEFORE `src` moves into place, and the
     * backup is deleted last. A crash at any point leaves either the new
@@ -84,7 +97,7 @@ object StoreFs {
     * silently trigger a full re-materialization and for harvest state a
     * re-upsert of already-loaded files. `recover` restores the backup
     * if a previous swap died between the two renames. */
-  def replace(spark: SparkSession, src: String, dest: String): Unit = {
+  private[graft] def replace(spark: SparkSession, src: String, dest: String): Unit = {
     val (f, d) = fs(spark, dest)
     val bak = new Path(dest + ".bak")
     if (f.exists(bak) && !f.delete(bak, true))
@@ -99,7 +112,7 @@ object StoreFs {
     f.delete(bak, true) // best-effort; a leftover bak is cleared next swap
   }
 
-  /** Restore `dest` from a leftover `dest.bak` if a previous `replace`
+  /** Restore `dest` from a leftover `dest.bak` if a previous [[rewrite]]
     * crashed after moving the old state aside but before the new state
     * landed. No-op when `dest` exists or no backup is present. */
   def recover(spark: SparkSession, dest: String): Boolean = {

@@ -18,15 +18,15 @@ import org.apache.spark.sql.functions._
   *   - `stats.json` — `n_docs` / `sum_dl`, read driver-side at query
   *     time (avgdl and the idf corpus constant come from here — no
   *     corpus-sized aggregation on the serving path).
-  *   - `batches/<id>` — incremental-add markers (see [[addBatch]]).
+  *   - batch markers and the `doc_id` tombstone table, kept by
+  *     [[IndexLog]] (namespaces `TextAdds` and `TextDeletes`).
   *
-  * Incremental adds append postings/doclen rows then write a batch
-  * marker; a replay with the marker present is a no-op. The crash
-  * window between append and marker can leave DUPLICATE rows, so
-  * every reader aggregates per key ([[postings]] max(tf) per
-  * (token, doc), [[doclen]] max(dl) per doc) — the pqRerank
-  * discipline: duplicates can never change a score or occupy two
-  * ranks, and [[compact]] physically removes them later.
+  * Adds, deletes and compaction follow the [[IndexLog]] protocol. The
+  * crash window between an add's append and its marker can leave
+  * DUPLICATE rows, so every reader aggregates per key ([[postings]]
+  * max(tf) per (token, doc), [[doclen]] max(dl) per doc) — the
+  * pqRerank discipline: duplicates can never change a score or occupy
+  * two ranks, and [[compact]] physically removes them later.
   */
 object TextIndex {
 
@@ -46,97 +46,63 @@ object TextIndex {
     * map-only projection; stats is one O(1) aggregate. */
   def build(docs: DataFrame, idCol: String, textCol: String,
             path: String): Unit = {
-    val spark = docs.sparkSession
-    val dl = docs.select(col(idCol).as("doc_id"),
+    writeTables(docs, idCol, textCol, path, "errorifexists")
+    writeStats(docs.sparkSession, path)
+  }
+
+  /** Write `docs`' doclen and postings rows with save mode `mode`. */
+  private def writeTables(docs: DataFrame, idCol: String, textCol: String,
+                          path: String, mode: String): Unit = {
+    docs.select(col(idCol).as("doc_id"),
       nTokens(textCol).cast("long").as("dl"))
-    dl.write.parquet(s"$path/doclen")
+      .write.mode(mode).parquet(s"$path/doclen")
     docs.select(col(idCol).as("doc_id"),
         explodeToks(textCol).as("token"))
       .groupBy(col("token"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
-      .write.partitionBy("token").parquet(s"$path/postings")
-    writeStats(spark, path)
+      .write.mode(mode).partitionBy("token").parquet(s"$path/postings")
   }
 
   /** Append a new document batch with the frozen tokenization —
-    * the daily-crawl update path. Exactly-once via a post-append
-    * marker: a committed replay is a no-op; a torn replay leaves
-    * duplicate rows the readers aggregate away. Stats are recomputed
-    * from the (deduplicated) doclen table and swapped in last, so a
-    * crash anywhere leaves a queryable index. */
+    * the daily-crawl update path, exactly-once per `batchId`
+    * ([[IndexLog]]); re-adding a deleted doc revives it. Stats are
+    * recomputed from the (deduplicated) doclen table and swapped in
+    * last, so a crash anywhere leaves a queryable index. */
   def addBatch(docs: DataFrame, idCol: String, textCol: String,
                path: String, batchId: String): Unit = {
     val spark = docs.sparkSession
-    require(!batchId.contains("/"), s"bad batchId: $batchId")
-    if (StoreFs.exists(spark, s"$path/batches/$batchId")) return
-    docs.select(col(idCol).as("doc_id"),
-      nTokens(textCol).cast("long").as("dl"))
-      .write.mode("append").parquet(s"$path/doclen")
-    docs.select(col(idCol).as("doc_id"),
-        explodeToks(textCol).as("token"))
-      .groupBy(col("token"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-      .write.mode("append").partitionBy("token").parquet(s"$path/postings")
-    // re-adding a previously deleted doc revives it: clear its
-    // tombstone (latest operation wins — see deleteDocs). A crash
-    // before this point replays the whole batch (marker not yet
-    // written); the replay's duplicate rows aggregate away.
-    val tomb = s"$path/tombstones"
-    StoreFs.recover(spark, tomb)
-    if (StoreFs.exists(spark, tomb)) {
-      val remaining = spark.read.parquet(tomb)
-        .join(docs.select(col(idCol).cast("long").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      remaining.coalesce(1).write.mode("overwrite").parquet(tomb + ".tmp")
-      StoreFs.replace(spark, tomb + ".tmp", tomb)
+    IndexLog.once(spark, path, IndexLog.TextAdds, Some(batchId)) {
+      writeTables(docs, idCol, textCol, path, "append")
+      IndexLog.revive(spark, path,
+        docs.select(col(idCol).cast("long").as("doc_id")), "doc_id")
+      writeStats(spark, path)
     }
-    writeStats(spark, path)
-    StoreFs.writeText(spark, s"$path/batches/$batchId", "done")
   }
 
-  /** Hide tombstoned docs ([[deleteDocs]]) from any doc_id-keyed
-    * table: one left_anti join against the O(deletes)-sized
-    * tombstones (absent = no-op), applied in the SHARED reads so
+  /** Hide tombstoned docs ([[deleteDocs]]) in the SHARED reads, so
     * bm25, bm25Batch and the boolean path all see the same corpus. */
   private def dropDeleted(spark: SparkSession, path: String,
-                          df: DataFrame): DataFrame = {
-    val t = s"$path/tombstones"
-    StoreFs.recover(spark, t)
-    if (!StoreFs.exists(spark, t)) df
-    else df.join(
-      spark.read.parquet(t)
-        .select(col("doc_id").cast(df.schema("doc_id").dataType).as("doc_id"))
-        .distinct(),
-      Seq("doc_id"), "left_anti")
-  }
+                          df: DataFrame): DataFrame =
+    IndexLog.dropTombstoned(spark, path, df, "doc_id")
 
-  /** DELETE documents from the index — the revoke path next to
-    * [[addBatch]] (takedowns and re-crawled docs leave a retrieval
-    * corpus as routinely as new ones arrive). A tombstone table keyed
-    * by doc_id hides the docs from every query path BEFORE any top-K
-    * cut; corpus stats (n_docs/avgdl, hence idf) refresh immediately;
-    * [[compact]] removes the rows physically and clears the table.
-    * An optional `batchId` marker (under `deletes/`) makes
-    * crash-retried deletes no-ops; re-adding a deleted doc via
-    * [[addBatch]] clears its tombstone — latest operation wins.
-    * Returns false iff the marker shows this batch already
-    * committed. */
+  /** DELETE documents (first column of `ids`) from the index — the
+    * revoke path next to [[addBatch]]: tombstones ([[IndexLog]]) hide
+    * them from every query path before any top-K cut, corpus stats
+    * (n_docs/avgdl, hence idf) refresh immediately, and [[compact]]
+    * removes the rows physically. Returns false iff `batchId`'s
+    * marker shows this batch already committed. */
   def deleteDocs(spark: SparkSession, path: String, ids: DataFrame,
                  batchId: Option[String] = None): Boolean = {
-    require(StoreFs.exists(spark, s"$path/postings") &&
-      StoreFs.exists(spark, s"$path/stats.json"),
-      s"deleteDocs: $path is not a text index")
-    batchId.foreach(b => require(!b.contains("/") && !b.contains(".."),
-      s"bad batchId: $b"))
-    val marker = batchId.map(b => s"$path/deletes/$b")
-    if (marker.exists(m => StoreFs.exists(spark, m))) return false
-    ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
-    writeStats(spark, path) // doclen() filters tombstones → stats follow
-    marker.foreach(m => StoreFs.writeText(spark, m, "done"))
-    true
+    requireTextIndex(spark, path, "deleteDocs")
+    IndexLog.once(spark, path, IndexLog.TextDeletes, batchId) {
+      IndexLog.tombstone(spark, path, ids, "doc_id")
+      writeStats(spark, path) // doclen() filters tombstones → stats follow
+    }
   }
+
+  private def requireTextIndex(spark: SparkSession, path: String, op: String): Unit =
+    require(IndexLog.layout(spark, path) == "text",
+      s"$op: $path is not a text index (postings/ + stats.json)")
 
   /** Path-level static partition pruning for a token-partitioned
     * parquet table (r19): resolve the query tokens' directories
@@ -217,15 +183,10 @@ object TextIndex {
     * an O(deletes) tombstone distinct; divisions are IEEE over exact
     * longs — deterministic. */
   def health(spark: SparkSession, path: String): DataFrame = {
-    require(StoreFs.exists(spark, s"$path/postings"),
-      s"$path has no postings/ table — not a text index")
+    requireTextIndex(spark, path, "health")
     val nDocs = spark.read.parquet(s"$path/doclen")
       .select(col("doc_id")).distinct().count()
-    val nTomb =
-      if (StoreFs.exists(spark, s"$path/tombstones"))
-        spark.read.parquet(s"$path/tombstones")
-          .select(col("doc_id")).distinct().count()
-      else 0L
+    val nTomb = IndexLog.tombstoneCount(spark, path, "doc_id")
     spark.read.parquet(s"$path/postings")
       .select(col("token"), col("doc_id")).distinct()
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
@@ -252,10 +213,7 @@ object TextIndex {
     val row = doclen(spark, path)
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head()
     val json = s"""{"n_docs": ${row.getLong(0)}, "sum_dl": ${row.getLong(1)}}"""
-    if (StoreFs.exists(spark, s"$path/stats.json")) {
-      StoreFs.writeText(spark, s"$path/stats.json.tmp", json)
-      StoreFs.replace(spark, s"$path/stats.json.tmp", s"$path/stats.json")
-    } else StoreFs.writeText(spark, s"$path/stats.json", json)
+    StoreFs.rewrite(spark, s"$path/stats.json")(StoreFs.writeText(spark, _, json))
   }
 
   /** Okapi BM25 over the stored index. Per query token: one pruned
@@ -359,40 +317,25 @@ object TextIndex {
   }
 
   /** Rewrite the index to a bounded file count, physically removing
-    * crash-window duplicate rows — months of daily [[addBatch]]
-    * appends otherwise tax every query with thousands of small-file
-    * footer reads. Temp-then-swap per table (a crash leaves the old
-    * or the new table, never neither); `stats.json` and batch
-    * markers untouched (dedup does not change them); queries are
+    * crash-window duplicate rows and tombstoned docs — months of daily
+    * [[addBatch]] appends otherwise tax every query with thousands of
+    * small-file footer reads. Each table is swapped in by
+    * [[StoreFs.rewrite]]; batch markers are untouched; queries are
     * bit-identical before/after. Refuses a path that is not a text
     * index. */
   def compact(spark: SparkSession, path: String): Unit = {
-    require(StoreFs.exists(spark, s"$path/postings") &&
-      StoreFs.exists(spark, s"$path/doclen") &&
-      StoreFs.exists(spark, s"$path/stats.json"),
-      s"compact: $path is not a text index (postings/ + doclen/ + stats.json)")
-    // a tmp left by a dead run would fail these default-mode writes
-    // forever (and under dynamic overwrite could leak junk token
-    // directories into the swap) — clear first
-    Seq(s"$path/postings.tmp", s"$path/doclen.tmp").foreach(StoreFs.delete(spark, _))
-    // tombstoned docs ([[deleteDocs]]) are PHYSICALLY removed here and
-    // the tombstone table cleared — a crash in between leaves
-    // already-purged ids harmlessly tombstoned (anti-join of an
-    // absent id is a no-op) and the next compact finishes the clear
-    val tombPath = s"$path/tombstones"
-    StoreFs.recover(spark, tombPath)
-    val hadTomb = StoreFs.exists(spark, tombPath)
-    val dedupPost = dropDeleted(spark, path,
-        spark.read.parquet(s"$path/postings")
-          .groupBy(col("token"), col("doc_id")).agg(max(col("tf")).as("tf")))
-      .select(col("doc_id"), col("tf"), col("token"))
-    dedupPost.write.partitionBy("token").parquet(s"$path/postings.tmp")
-    StoreFs.replace(spark, s"$path/postings.tmp", s"$path/postings")
-    val dedupDl = doclen(spark, path) // already tombstone-filtered
-    dedupDl.write.parquet(s"$path/doclen.tmp")
-    StoreFs.replace(spark, s"$path/doclen.tmp", s"$path/doclen")
+    requireTextIndex(spark, path, "compact")
+    val hadTomb = IndexLog.hasTombstones(spark, path)
+    StoreFs.rewrite(spark, s"$path/postings")(tmp =>
+      dropDeleted(spark, path,
+          spark.read.parquet(s"$path/postings")
+            .groupBy(col("token"), col("doc_id")).agg(max(col("tf")).as("tf")))
+        .select(col("doc_id"), col("tf"), col("token"))
+        .write.partitionBy("token").parquet(tmp))
+    // doclen() is already tombstone-filtered
+    StoreFs.rewrite(spark, s"$path/doclen")(doclen(spark, path).write.parquet(_))
     if (hadTomb) {
-      StoreFs.delete(spark, tombPath)
+      IndexLog.purgeTombstones(spark, path)
       writeStats(spark, path)
     }
   }

@@ -92,11 +92,7 @@ object TrendStoreWriter {
       .filter(p => p.getName.startsWith("p_date=") &&
         p.getName.stripPrefix("p_date=") < keepFrom)
       .sortBy(_.getName)
-    val (f, _) = StoreFs.fs(spark, path)
-    expired.foreach { p =>
-      if (!f.delete(p, true))
-        throw new java.io.IOException(s"failed to drop expired partition $p")
-    }
+    expired.foreach(p => StoreFs.delete(spark, p.toString))
     expired.map(_.getName.stripPrefix("p_date="))
   }
 
@@ -119,12 +115,8 @@ object TrendStoreWriter {
     val removed = dayRows.filter(col("bucket") === target).count()
     if (removed == 0L) return 0L
     val survivors = dayRows.filter(col("bucket") =!= target).localCheckpoint()
-    if (survivors.isEmpty) {
-      val (f, _) = StoreFs.fs(spark, path)
-      val p = new org.apache.hadoop.fs.Path(s"$path/p_date=$day")
-      if (!f.delete(p, true))
-        throw new java.io.IOException(s"failed to drop emptied partition $p")
-    } else write(survivors, path)
+    if (survivors.isEmpty) StoreFs.delete(spark, s"$path/p_date=$day")
+    else write(survivors, path)
     removed
   }
 

@@ -1136,12 +1136,10 @@ object TextSim {
           .select(col("cell").cast("long").as("cell"),
             lit(nc).as("n_corpus"), lit(sv).as("vec_sum"))
           .write.mode("overwrite").parquet(s"$ex/centroids")
-        val tomb =
-          if (graft.operators.StoreFs.exists(s, s"$idx/tombstones"))
-            s.read.parquet(s"$idx/tombstones").select(col("n_id"))
-          else s.range(0).select(col("id").as("n_id"))
-        tomb.withColumn("n_corpus", lit(nc)).withColumn("vec_sum", lit(sv))
-          .write.mode("overwrite").parquet(s"$ex/tombstones")
+        graft.operators.IndexLog.tombstones(s, idx, "n_id")
+          .getOrElse(s.range(0).select(col("id").as("n_id")))
+          .withColumn("n_corpus", lit(nc)).withColumn("vec_sum", lit(sv))
+          .write.mode("overwrite").parquet(graft.operators.IndexLog.tombstonePath(ex))
         java.lang.Boolean.TRUE
       })
       stats

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExpressions
+import graft.operators.IndexLog
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -41,8 +42,8 @@ object Similarity {
     * job on EVERY query is pure per-query overhead, r19 event-log
     * evidence in OPTIMIZATION_r19.md). The fingerprint makes this a
     * pure read-through cache of IMMUTABLE index metadata, never of
-    * results: quantizers are frozen at build time (adds/deletes/
-    * compactions touch codes/cells/tombstones only), and any rewrite
+    * results: quantizers are frozen at build time (adds, deletes and
+    * compactions touch only the data and tombstone tables), and any rewrite
     * of the metadata table changes its fingerprint, which re-reads
     * the table and REPLACES the path's entry — a rebuild at the same
     * path never leaves the old O(nCells·dims) value behind. */
@@ -536,28 +537,31 @@ object Similarity {
     }
 
   /** Self-heal the data-sized index tables after a torn
-    * [[compactIndex]] swap: in the crash window between replace()'s
+    * [[compactIndex]] swap: in the crash window between the swap's
     * two renames a table dir is absent and only its .bak holds the
     * state — an un-healed search would fail (or, for an exists-probe
-    * path, silently see an empty table). O(1) metadata per call. */
+    * path, silently see an empty table). O(1) metadata per call. The
+    * tombstone table heals itself in [[graft.operators.IndexLog]]. */
   private def recoverIndex(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String): Unit =
-    Seq("codes", "cells", "vectors", "tombstones").foreach(t =>
+    Seq("codes", "cells", "vectors").foreach(t =>
       graft.operators.StoreFs.recover(spark, s"$indexPath/$t"))
 
-  /** Hide tombstoned ids from a candidate table — the serve-time half
-    * of [[annDelete]]. One left_anti join on the fixed-width id
-    * against the O(deletes)-sized tombstones table (absent = no-op);
-    * applied BEFORE any top-k cut so a deleted vector can neither
-    * rank nor crowd the candidate list. */
+  /** Hide [[annDelete]]d ids from a candidate table, BEFORE any top-k
+    * cut so a deleted vector can neither rank nor crowd the list. */
   private def dropTombstones(spark: org.apache.spark.sql.SparkSession,
                              indexPath: String,
-                             candidates: DataFrame): DataFrame = {
-    val t = s"$indexPath/tombstones"
-    if (!graft.operators.StoreFs.exists(spark, t)) candidates
-    else candidates.join(
-      spark.read.parquet(t).select(col("n_id")).distinct(),
-      Seq("n_id"), "left_anti")
+                             candidates: DataFrame): DataFrame =
+    IndexLog.dropTombstoned(spark, indexPath, candidates, "n_id")
+
+  /** The persisted ANN layout at `indexPath` (ivf | pq | ivfpq), or an
+    * IllegalArgumentException when it is not an ANN index. */
+  private def annLayout(spark: org.apache.spark.sql.SparkSession,
+                        indexPath: String): String = {
+    val layout = IndexLog.layout(spark, indexPath)
+    require(IndexLog.AnnLayouts(layout),
+      s"$indexPath has no codes/ or cells/ table — not a persisted ANN index")
+    layout
   }
 
   /** Index-health report — the ops number an operator reads BEFORE
@@ -579,20 +583,10 @@ object Similarity {
     * directory key) + an O(deletes) tombstone count. */
   def indexStats(spark: org.apache.spark.sql.SparkSession,
                  indexPath: String): DataFrame = {
-    import graft.operators.StoreFs
     recoverIndex(spark, indexPath)
-    val hasCells = StoreFs.exists(spark, s"$indexPath/cells")
-    val hasCodes = StoreFs.exists(spark, s"$indexPath/codes")
-    val hasCents = StoreFs.exists(spark, s"$indexPath/centroids")
-    require(hasCells || hasCodes,
-      s"$indexPath has no codes/ or cells/ table — not a persisted ANN index")
-    val layout = if (hasCells) "ivf" else if (hasCents) "ivfpq" else "pq"
-    val dataPath = if (hasCells) s"$indexPath/cells" else s"$indexPath/codes"
-    val nTomb =
-      if (StoreFs.exists(spark, s"$indexPath/tombstones"))
-        spark.read.parquet(s"$indexPath/tombstones")
-          .select(col("n_id")).distinct().count()
-      else 0L
+    val layout = annLayout(spark, indexPath)
+    val dataPath = if (layout == "ivf") s"$indexPath/cells" else s"$indexPath/codes"
+    val nTomb = IndexLog.tombstoneCount(spark, indexPath, "n_id")
     val base = layout match {
       case "pq" =>
         spark.read.parquet(dataPath).agg(count(lit(1)).as("n_vectors"))
@@ -622,42 +616,20 @@ object Similarity {
     base.withColumn("n_tombstones", lit(nTomb))
   }
 
-  /** DELETE vectors from a persisted ANN index — the lifecycle op the
-    * add/compact pair was missing (a crawl loop drops revoked or
-    * re-crawled docs as routinely as it adds new ones). Deletion is a
-    * TOMBSTONE: the ids append to `indexPath/tombstones` (O(deletes)
-    * rows, fixed-width), every search path anti-joins them before
-    * ranking, and the next [[compactIndex]] removes the rows
-    * physically and clears the table. Works on all three persisted
-    * layouts (the tombstone is id-keyed, not layout-keyed).
-    *
-    * Exactly-once: an optional `batchId` marker (written AFTER the
-    * append, `_deletes/<id>`) makes crash-retried deletes no-ops; the
-    * crash window's duplicate tombstone rows are harmless (the serve
-    * path reads the id SET). Re-adding a deleted id via [[ivfpqAdd]]
-    * clears its tombstone — latest operation wins. Returns false iff
-    * the marker shows this batch already committed. */
+  /** DELETE vectors (first column of `ids`) from a persisted ANN
+    * index — the lifecycle op next to add/compact (a crawl loop drops
+    * revoked or re-crawled docs as routinely as it adds new ones).
+    * Deletion is an `n_id` tombstone ([[graft.operators.IndexLog]]):
+    * every search path anti-joins it before ranking, [[ivfpqAdd]]
+    * revives a re-added id, and the next [[compactIndex]] removes the
+    * rows physically. Works on all three persisted layouts. Returns
+    * false iff `batchId`'s marker shows this batch already committed. */
   def annDelete(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                 ids: DataFrame, batchId: Option[String] = None): Boolean = {
-    import graft.operators.StoreFs
-    require(StoreFs.exists(spark, s"$indexPath/codes") ||
-      StoreFs.exists(spark, s"$indexPath/cells"),
-      s"$indexPath has no codes/ or cells/ table — not a persisted ANN index")
-    // mirror TextIndex.deleteDocs: a '/' (or '..') in the batch id
-    // would nest or escape the _deletes/ marker namespace, making the
-    // same CLI --batch input behave differently on the two families
-    batchId.foreach(b => require(!b.contains("/") && !b.contains(".."),
-      s"bad batchId: $b"))
-    val marker = batchId.map(b => s"$indexPath/_deletes/$b")
-    if (marker.exists(m => StoreFs.exists(spark, m))) return false
-    recoverIndex(spark, indexPath)
-    ids.select(col(ids.columns.head).cast("long").as("n_id")).distinct()
-      .write.mode("append").parquet(s"$indexPath/tombstones")
-    marker.foreach { m =>
-      val (f, p) = StoreFs.fs(spark, m)
-      f.mkdirs(p)
+    annLayout(spark, indexPath)
+    IndexLog.once(spark, indexPath, IndexLog.AnnDeletes, batchId) {
+      IndexLog.tombstone(spark, indexPath, ids, "n_id")
     }
-    true
   }
 
   /** Seeded Lloyd k-means over an in-memory sample (the IVF coarse
@@ -994,17 +966,21 @@ object Similarity {
     * rewritten. Searches see the union immediately.
     *
     * Replay discipline: pass `batchId` (e.g. the crawl-day name) and
-    * a retried or accidentally repeated add becomes a no-op — a
-    * marker under `indexPath/_adds/` records committed batches and is
-    * written AFTER both appends, so the only crash window re-appends
-    * the same rows, which search tolerates (pqRerank dedupes
-    * (q_id, n_id), matching ivfScore). Returns true when the batch
-    * was appended, false when the marker made it a no-op. */
+    * a retried or accidentally repeated add becomes a no-op
+    * ([[graft.operators.IndexLog]] marker, written after both
+    * appends); the only crash window re-appends the same rows, which
+    * search tolerates (pqRerank dedupes (q_id, n_id), matching
+    * ivfScore). Re-adding a deleted id revives it. Returns true when
+    * the batch was appended, false when the marker made it a no-op. */
   def ivfpqAdd(batch: DataFrame, cId: String, vecCol: String,
-               indexPath: String, batchId: Option[String] = None): Boolean = {
+               indexPath: String, batchId: Option[String] = None): Boolean =
+    IndexLog.once(batch.sparkSession, indexPath, IndexLog.AnnAdds, batchId)(
+      appendEncoded(batch, cId, vecCol, indexPath))
+
+  /** [[ivfpqAdd]]'s effect: encode with the stored quantizers, append. */
+  private def appendEncoded(batch: DataFrame, cId: String, vecCol: String,
+                            indexPath: String): Unit = {
     val spark = batch.sparkSession
-    val marker = batchId.map(b => s"$indexPath/_adds/$b")
-    if (marker.exists(m => graft.operators.StoreFs.exists(spark, m))) return false
     recoverIndex(spark, indexPath) // heal a torn compaction swap
 
     val centRows = loadCentroidRows(spark, indexPath)
@@ -1038,25 +1014,7 @@ object Similarity {
     coded.select(col("n_id"), col("__codes"), col("cell"))
       .write.partitionBy("cell").mode("append").parquet(s"$indexPath/codes")
     c.write.mode("append").parquet(s"$indexPath/vectors")
-    // re-adding a previously deleted id revives it: clear its
-    // tombstone (latest operation wins — see annDelete). Rewrite of
-    // the O(deletes)-sized table via temp-then-swap; a crash before
-    // this point replays the whole batch (marker not yet written),
-    // and the replay's duplicate code rows cannot change a score
-    // (pqRerank dedupes) — so the clear always completes.
-    val tomb = s"$indexPath/tombstones"
-    if (graft.operators.StoreFs.exists(spark, tomb)) {
-      val remaining = spark.read.parquet(tomb)
-        .join(c.select(col("n_id")).distinct(), Seq("n_id"), "left_anti")
-        .localCheckpoint()
-      remaining.coalesce(1).write.mode("overwrite").parquet(tomb + ".tmp")
-      graft.operators.StoreFs.replace(spark, tomb + ".tmp", tomb)
-    }
-    marker.foreach { m =>
-      val (f, p) = graft.operators.StoreFs.fs(spark, m)
-      f.mkdirs(p)
-    }
-    true
+    IndexLog.revive(spark, indexPath, c.select(col("n_id")), "n_id")
   }
 
   /** Compact a persisted ANN index after incremental adds. Every
@@ -1066,7 +1024,7 @@ object Similarity {
     * dominate the m-int payload (the same small-file tax
     * `Dedup.compactIndex` fixes for the dedup indexes). Rewrites the
     * DATA-sized tables via the temp-then-swap discipline
-    * (StoreFs.replace: a crash mid-compact leaves the old or the new
+    * (StoreFs.rewrite: a crash mid-compact leaves the old or the new
     * table, never neither; readers self-heal a torn swap via
     * `recover`):
     *  - cell-partitioned tables (IVF-PQ `codes/`, IVF `cells/`) are
@@ -1075,55 +1033,29 @@ object Similarity {
     *    search (s08/s09) reads one file per probed cell;
     *  - flat tables (PQ `codes/`, `vectors/`) repartition to
     *    `nFiles`.
+    * Tombstoned ([[annDelete]]) rows are removed physically and the
+    * tombstone table cleared ([[graft.operators.IndexLog]]).
     * Quantizers (`centroids/`, `codebooks/`, `rotation/`) and the
-    * `_adds/` replay markers are metadata-sized and untouched — a
-    * compaction changes file layout only, never a search result
-    * (spec-asserted identical before/after). Works on all three
-    * persisted layouts (ivf / pq / ivfpq, auto-detected). Returns
-    * the indexed row count. */
+    * replay markers are metadata-sized and untouched — a compaction
+    * changes file layout only, never a search result (spec-asserted
+    * identical before/after). Works on all three persisted layouts
+    * (ivf / pq / ivfpq, auto-detected). Returns the indexed row
+    * count. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
                    indexPath: String, nFiles: Int = 8): Long = {
     require(nFiles > 0, s"nFiles must be positive, got $nFiles")
-    import graft.operators.StoreFs
-    // tombstoned rows ([[annDelete]]) are PHYSICALLY removed here and
-    // the tombstone table cleared afterwards — a crash in between
-    // leaves already-purged ids harmlessly tombstoned (the serve-time
-    // anti-join of an absent id is a no-op) and the next compaction
-    // finishes the clear.
-    val tombPath = s"$indexPath/tombstones"
-    StoreFs.recover(spark, tombPath)
-    val tomb: Option[DataFrame] =
-      if (StoreFs.exists(spark, tombPath))
-        Some(spark.read.parquet(tombPath).select(col("n_id")).distinct()
-          .localCheckpoint())
-      else None
-    def rewrite(path: String): Long = {
-      StoreFs.recover(spark, path)
-      if (!StoreFs.exists(spark, path)) return 0L
-      val df0 = spark.read.parquet(path)
-      val df = tomb.filter(_ => df0.columns.contains("n_id"))
-        .fold(df0)(t => df0.join(t, Seq("n_id"), "left_anti"))
-      val tmp = path + ".compact.tmp"
-      // clear any stale tmp from a dead run: under a session-wide
-      // partitionOverwriteMode=dynamic, the partitioned overwrite
-      // below would otherwise keep a dead run's junk cell directories
-      // and swap them into the index
-      StoreFs.delete(spark, tmp)
-      if (df.schema.fieldNames.contains("cell"))
-        df.repartition(nFiles, col("cell"))
-          .write.partitionBy("cell").mode("overwrite").parquet(tmp)
-      else df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
-      StoreFs.replace(spark, tmp, path)
-      spark.read.parquet(path).count()
-    }
-    require(StoreFs.exists(spark, s"$indexPath/codes") ||
-      StoreFs.exists(spark, s"$indexPath/cells"),
-      s"$indexPath has no codes/ or cells/ table — not a persisted ANN index")
+    annLayout(spark, indexPath)
+    val tomb = IndexLog.tombstones(spark, indexPath, "n_id")
+      .map(_.distinct().localCheckpoint())
+    def rewrite(table: String): Long =
+      IndexLog.compactTable(spark, table, nFiles, df =>
+        tomb.filter(_ => df.columns.contains("n_id"))
+          .fold(df)(t => df.join(t, Seq("n_id"), "left_anti")))
     val nCodes = rewrite(s"$indexPath/codes")   // pq / ivfpq
     val nCells = rewrite(s"$indexPath/cells")   // ivf
     rewrite(s"$indexPath/vectors")              // pq / ivfpq re-rank side
     // all data tables purged → the tombstones have no referent left
-    tomb.foreach(_ => StoreFs.delete(spark, tombPath))
+    tomb.foreach(_ => IndexLog.purgeTombstones(spark, indexPath))
     math.max(nCodes, nCells)
   }
 

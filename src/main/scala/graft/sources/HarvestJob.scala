@@ -272,9 +272,7 @@ object HarvestJob {
     // State = previously processed ∪ this run; temp-then-swap with a
     // checked rename, same discipline as materialization state.
     val newState = (seen ++ fresh).toSeq.sorted.toDF("file")
-    val tmp = job.statePath + ".tmp"
-    newState.coalesce(1).write.mode("overwrite").parquet(tmp)
-    StoreFs.replace(spark, tmp, job.statePath)
+    StoreFs.rewrite(spark, job.statePath)(newState.coalesce(1).write.mode("overwrite").parquet(_))
     RunResult(fresh, old)
   }
 }

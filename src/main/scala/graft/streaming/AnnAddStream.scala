@@ -15,7 +15,7 @@ import graft.similarity.Similarity
   * standard production posture.
   *
   * Exactly-once across checkpoint recovery comes from `ivfpqAdd`'s
-  * own batch marker (`indexPath/_adds/stream-<batchId>`, written
+  * own batch marker (`IndexLog`, id `stream-<batchId>`, written
   * AFTER both appends): a foreachBatch replay of a committed batch
   * is a no-op, and the only crash window re-appends the same rows,
   * which search tolerates (pqRerank dedupes (q_id, n_id)). No

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{Dedup, StoreFs}
+import graft.operators.{Dedup, IndexLog}
 
 /** Continuous NEAR-duplicate deduplication against a persisted LSH
   * index — the streaming twin of `Dedup.nearDedupIncrementalStaged`,
@@ -16,8 +16,8 @@ import graft.operators.{Dedup, StoreFs}
   * signature-space verify) inside `foreachBatch`, writes its
   * survivors to `outputPath/batch=<id>` and commits their
   * bands+signatures to the index. Exactly-once across checkpoint
-  * recovery comes from a TWO-MARKER discipline under
-  * `indexPath/_batches/` — strictly stronger than the batch CLI's
+  * recovery comes from a TWO-MARKER discipline (`IndexLog`
+  * `StreamBatches` markers) — strictly stronger than the batch CLI's
   * staged commit, because a foreachBatch replay is automatic and
   * must never re-probe a batch whose signatures are already
   * (partially) indexed: every doc would drop against its own
@@ -61,26 +61,20 @@ object NearStreamDedup {
                    k: Int = 3, numPerm: Int = 64, bands: Int = 32,
                    threshold: Double = 0.7): Unit = {
     val spark = batch.sparkSession
-    val done = s"$indexPath/_batches/done-$batchId"
-    val intent = s"$indexPath/_batches/intent-$batchId"
-    if (StoreFs.exists(spark, done)) return
-    val out = s"$outputPath/batch=$batchId"
-    if (!StoreFs.exists(spark, intent)) {
-      val staged = Dedup.nearDedupIncrementalStaged(spark, batch, idCol,
-        textCol, indexPath, k, numPerm, bands, threshold)
-      staged.survivors.write.mode("overwrite").parquet(out)
-      mkdir(spark, intent)
-      staged.commit()
-    } else {
-      // survivors already persisted; never re-probe (self-drop risk)
-      Dedup.nearIndexAppend(spark, spark.read.parquet(out), idCol, textCol,
-        indexPath, k, numPerm, bands)
+    val intent = s"intent-$batchId"
+    IndexLog.once(spark, indexPath, IndexLog.StreamBatches, Some(s"done-$batchId")) {
+      val out = s"$outputPath/batch=$batchId"
+      if (!IndexLog.committed(spark, indexPath, IndexLog.StreamBatches, intent)) {
+        val staged = Dedup.nearDedupIncrementalStaged(spark, batch, idCol,
+          textCol, indexPath, k, numPerm, bands, threshold)
+        staged.survivors.write.mode("overwrite").parquet(out)
+        IndexLog.commit(spark, indexPath, IndexLog.StreamBatches, intent)
+        staged.commit()
+      } else {
+        // survivors already persisted; never re-probe (self-drop risk)
+        Dedup.nearIndexAppend(spark, spark.read.parquet(out), idCol, textCol,
+          indexPath, k, numPerm, bands)
+      }
     }
-    mkdir(spark, done)
-  }
-
-  private def mkdir(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val (f, p) = StoreFs.fs(spark, path)
-    f.mkdirs(p)
   }
 }

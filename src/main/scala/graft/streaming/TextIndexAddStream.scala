@@ -14,7 +14,7 @@ import graft.operators.TextIndex
   * avgdl track the growing corpus.
   *
   * Exactly-once across checkpoint recovery rides `addBatch`'s own
-  * post-append marker (`indexPath/batches/stream-<batchId>`): a
+  * post-append marker (`IndexLog`, id `stream-<batchId>`): a
   * foreachBatch replay of a committed batch is a no-op, and the only
   * crash window re-appends the same rows, which every reader
   * tolerates (per-key aggregation — see TextIndex) and
