@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr, to_json}
-import graft.operators.{Aggregation, AttributeStoreWriter, Dedup, Materialize, TrendStoreWriter, Trigger}
+import graft.operators.{Aggregation, AttributeStoreWriter, Dedup, Materialize, StoreFs, TrendStoreWriter, Trigger}
 import graft.sources.HarvestJob
 
 /** Thin CLI over the library — the `minerva harvest` / `minerva
@@ -318,7 +318,7 @@ object Cli {
         // same single-writer lease as materialize/harvest: a rewrite
         // racing a store writer would swap away its partitions
         Materialize.withLease(spark, path + ".lease") {
-          graft.operators.StoreFs.rewrite(spark, path)(tmp => TrendStoreWriter.write(
+          StoreFs.rewrite(spark, path)(tmp => TrendStoreWriter.write(
             TrendStoreWriter.read(spark, path).drop("p_date"), tmp, clusterBy = by))
         }
         println(s"cluster: store=$path by=${by.mkString(",")}")
@@ -508,7 +508,7 @@ object Cli {
             one(f, "index"), threshold = opt(f, "threshold", "0.7").toDouble)
           staged.survivors.write.mode("overwrite").parquet(one(f, "out"))
           staged.commit()
-          spark.read.parquet(one(f, "out")).count()
+          StoreFs.read(spark, one(f, "out")).count()
         // span = incremental duplicated-span SCRUB: the out table is
         // the CLEANED batch; --batch tags the commit for exactly-once
         // replay (see Dedup.spanScrubIncremental)
@@ -519,7 +519,7 @@ object Cli {
             stride = opt(f, "stride", "8").toInt)
           staged.survivors.write.mode("overwrite").parquet(one(f, "out"))
           staged.commit()
-          spark.read.parquet(one(f, "out")).count()
+          StoreFs.read(spark, one(f, "out")).count()
         case m => throw new IllegalArgumentException(
           s"--method must be exact|near|span, got: $m")
       }
@@ -543,7 +543,7 @@ object Cli {
           nFiles = opt(f, "files", "8").toInt)
         case "text" =>
           graft.operators.TextIndex.compact(spark, path)
-          spark.read.parquet(s"$path/postings").count()
+          StoreFs.read(spark, s"$path/postings").count()
         case _ => Dedup.compactIndex(spark, path,
           nFiles = opt(f, "files", "8").toInt, method = method)
       }
@@ -556,9 +556,9 @@ object Cli {
       // = O(days) directory listing; --counts opts into the one scan)
       val f = parseFlags(rest)
       val path = one(f, "store")
-      val parts = graft.operators.StoreFs.list(spark, path)
+      val parts = StoreFs.list(spark, path)
         .map(_.getName).filter(_.startsWith("p_date=")).sorted
-      val df = spark.read.option("mergeSchema", "true").parquet(path)
+      val df = StoreFs.read(spark, path, mergeSchema = true)
       println(s"store-info: path=$path")
       println("  schema: " + df.schema.fields
         .map(fd => s"${fd.name}:${fd.dataType.simpleString}").mkString(", "))
@@ -579,7 +579,7 @@ object Cli {
       val path = one(f, "store")
       val gran = opt(f, "granularity", "hour")
       val topN = opt(f, "top", "5").toInt
-      val store = spark.read.option("mergeSchema", "true").parquet(path)
+      val store = StoreFs.read(spark, path, mergeSchema = true)
       val nEntities = store.select(col("entity_id")).distinct().count()
       val observed = store.select(col("entity_id"), col("bucket")).distinct().count()
       val outages = graft.operators.TrendStore.outageWindows(
@@ -617,7 +617,7 @@ object Cli {
       val out = one(f, "out")
       val fmt = opt(f, "format", "csv").toLowerCase
       require(Set("csv", "jsonl")(fmt), s"dump: unknown format $fmt (csv|jsonl)")
-      val raw = spark.read.option("mergeSchema", "true").parquet(store)
+      val raw = StoreFs.read(spark, store, mergeSchema = true)
       val (from, to) = (f.get("from").map(_.last), f.get("to").map(_.last))
       require((from.isEmpty && to.isEmpty) || raw.columns.contains("p_date"),
         "dump: --from/--to prune p_date partitions, but this store has " +
@@ -665,34 +665,33 @@ object Cli {
       // of the (narrow) index tables only, never a corpus read.
       val f = parseFlags(rest)
       val path = one(f, "index")
-      import graft.operators.StoreFs
       def ex(d: String) = StoreFs.exists(spark, s"$path/$d")
       val layout = graft.operators.IndexLog.layout(spark, path)
       println(s"index-info: path=$path layout=$layout")
       layout match {
         case "text" =>
           println(s"  stats: ${StoreFs.readText(spark, s"$path/stats.json").trim}")
-          println(s"  posting rows: ${spark.read.parquet(s"$path/postings").count()}")
+          println(s"  posting rows: ${StoreFs.read(spark, s"$path/postings").count()}")
         case "ivfpq" | "pq" =>
-          val books = spark.read.parquet(s"$path/codebooks")
+          val books = StoreFs.read(spark, s"$path/codebooks")
           val mc = books.agg(org.apache.spark.sql.functions.max(col("sub")),
             org.apache.spark.sql.functions.max(col("code"))).head
           println(s"  codebooks: m=${mc.getInt(0) + 1} codes=${mc.getInt(1) + 1}")
           if (layout == "ivfpq")
-            println(s"  cells: ${spark.read.parquet(s"$path/centroids").count()}")
-          println(s"  rows: ${spark.read.parquet(s"$path/codes").count()}")
+            println(s"  cells: ${StoreFs.read(spark, s"$path/centroids").count()}")
+          println(s"  rows: ${StoreFs.read(spark, s"$path/codes").count()}")
         case "ivf" =>
-          println(s"  cells: ${spark.read.parquet(s"$path/centroids").count()}")
-          println(s"  rows: ${spark.read.parquet(s"$path/cells").count()}")
+          println(s"  cells: ${StoreFs.read(spark, s"$path/centroids").count()}")
+          println(s"  rows: ${StoreFs.read(spark, s"$path/cells").count()}")
         case "near" =>
           if (ex("params.json"))
             println(s"  params: ${StoreFs.readText(spark, s"$path/params.json").trim}")
           // A crash between Dedup's bands append and sigs append leaves
           // bands/ without sigs/ — introspection must report, not throw.
-          if (ex("sigs")) println(s"  rows: ${spark.read.parquet(s"$path/sigs").count()}")
+          if (ex("sigs")) println(s"  rows: ${StoreFs.read(spark, s"$path/sigs").count()}")
           else println("  rows: unknown (sigs missing — partial commit)")
         case _ =>
-          println(s"  rows: ${spark.read.parquet(path).count()}")
+          println(s"  rows: ${StoreFs.read(spark, path).count()}")
       }
       // --stats: the balance health report — cell balance for the ANN
       // layouts (Similarity.indexStats), posting-list balance for the

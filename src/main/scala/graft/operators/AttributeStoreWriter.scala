@@ -55,7 +55,7 @@ object AttributeStoreWriter {
     // mid-history) parquet may otherwise resolve the schema from a
     // pre-evolution footer and the rewrite would silently DROP the
     // new column from every day it touches.
-    val hist = spark.read.option("mergeSchema", "true").parquet(historyPath)
+    val hist = StoreFs.read(spark, historyPath, mergeSchema = true)
     val compacted = AttributeStore.compact(hist,
       col(entityCol), col(tsCol), col(tieCol), col(valueCol))
     rewriteCompacted(spark, historyPath, hist, compacted)
@@ -76,7 +76,7 @@ object AttributeStoreWriter {
                         entityCol: String = "entity_id", tsCol: String = "ts",
                         tieCol: String = "event_id"): (Long, Seq[java.sql.Date]) = {
     require(valueCols.nonEmpty, "compactHistoryAll: at least one value column required")
-    val hist = spark.read.option("mergeSchema", "true").parquet(historyPath)
+    val hist = StoreFs.read(spark, historyPath, mergeSchema = true)
     val v = struct(valueCols.map(col): _*)
     import org.apache.spark.sql.expressions.Window
     val compacted = hist.withColumn("__prev",
@@ -139,6 +139,6 @@ object AttributeStoreWriter {
     val hist = readHistory(spark, historyPath).drop("p_date")
     val cur = AttributeStore.current(hist, col(entityCol), col(tsCol), col(tieCol))
     StoreFs.rewrite(spark, currentPath)(cur.write.mode("overwrite").parquet(_))
-    spark.read.parquet(currentPath)
+    StoreFs.read(spark, currentPath)
   }
 }

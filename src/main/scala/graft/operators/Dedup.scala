@@ -539,7 +539,7 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
     val fresh =
       if (!StoreFs.exists(spark, indexPath)) firsts
-      else firsts.join(spark.read.parquet(indexPath), Seq("__h"), "left_anti")
+      else firsts.join(StoreFs.read(spark, indexPath), Seq("__h"), "left_anti")
     // batch-sized WITH text — disk, not the unified pool (ccStars policy)
     val survivors = fresh.localCheckpoint(true, StorageLevel.DISK_ONLY)
     IncrementalDedup(survivors.drop("__h"),
@@ -615,7 +615,7 @@ object Dedup {
       lit(true).as("__within"))
     val indexPost =
       if (!StoreFs.exists(spark, s"$indexPath/bands")) None
-      else Some(spark.read.parquet(s"$indexPath/bands")
+      else Some(StoreFs.read(spark, s"$indexPath/bands")
         .select(col("band"), col("doc_id").as("__o_id"),
           lit(false).as("__within")))
     val allPost = indexPost.fold(batchPost)(batchPost.unionByName(_))
@@ -629,7 +629,7 @@ object Dedup {
     val crossSig =
       if (indexPost.isEmpty) withinSig.limit(0)
       else cands.filter(!col("__within"))
-        .join(spark.read.parquet(s"$indexPath/sigs")
+        .join(StoreFs.read(spark, s"$indexPath/sigs")
           .select(col("doc_id").as("__o_id2"), col("sig").as("__o_sig")),
           col("__o_id") === col("__o_id2"))
         .select(col("doc_id"), col("__o_sig"))
@@ -772,7 +772,7 @@ object Dedup {
     val staged = dedupIncrementalStaged(spark, newDocs, idCol, textCol, indexPath)
     staged.survivors.write.mode("overwrite").parquet(outputPath)
     staged.commit()
-    spark.read.parquet(outputPath)
+    StoreFs.read(spark, outputPath)
   }
 
   /** C4-style paragraph-level dedup: split each document on the
@@ -950,7 +950,7 @@ object Dedup {
       .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val indexed: Option[DataFrame] =
       if (!StoreFs.exists(spark, indexPath)) None
-      else Some(spark.read.parquet(indexPath)
+      else Some(StoreFs.read(spark, indexPath)
         .filter(col("batch") =!= batchId) // replay: exclude own prior commit
         .select(col("h")).distinct()
         .withColumn("__ixd", lit(true)))
@@ -974,7 +974,7 @@ object Dedup {
       .localCheckpoint(true, StorageLevel.DISK_ONLY)
     IncrementalDedup(cleaned, () => {
       val alreadyCommitted = StoreFs.exists(spark, indexPath) &&
-        !spark.read.parquet(indexPath).filter(col("batch") === batchId).isEmpty
+        !StoreFs.read(spark, indexPath).filter(col("batch") === batchId).isEmpty
       if (!alreadyCommitted)
         spanify(cleaned, "doc_id", "text", window, stride)
           .select(col("h")).distinct()

@@ -49,7 +49,7 @@ object EntityRegistry {
     val incoming = register(src, dn, entityType, alias)
     val fresh =
       if (!StoreFs.exists(spark, path)) incoming
-      else incoming.join(spark.read.parquet(path).select(col("dn")),
+      else incoming.join(StoreFs.read(spark, path).select(col("dn")),
         Seq("dn"), "left_anti")
     // localCheckpoint: the append below must not re-trigger the plan
     // that read the store it appends to.

@@ -74,7 +74,7 @@ object IndexLog {
   def tombstones(spark: SparkSession, index: String,
                  idCol: String): Option[DataFrame] =
     if (!hasTombstones(spark, index)) None
-    else Some(spark.read.parquet(tombstonePath(index)).select(col(idCol)))
+    else Some(StoreFs.read(spark, tombstonePath(index)).select(col(idCol)))
 
   /** Tombstone the ids in `ids`' first column. Crash-window duplicate
     * rows are harmless: readers use the id set. */
@@ -141,13 +141,13 @@ object IndexLog {
                    keep: DataFrame => DataFrame = identity): Long = {
     StoreFs.recover(spark, table)
     if (!StoreFs.exists(spark, table)) return 0L
-    val df = keep(spark.read.parquet(table))
+    val df = keep(StoreFs.read(spark, table))
     StoreFs.rewrite(spark, table) { tmp =>
       if (df.columns.contains("cell"))
         df.repartition(nFiles, col("cell"))
           .write.partitionBy("cell").mode("overwrite").parquet(tmp)
       else df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(table).count()
+    StoreFs.read(spark, table).count()
   }
 }

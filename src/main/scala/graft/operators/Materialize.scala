@@ -105,7 +105,7 @@ object Materialize {
     * whatever filesystem the cluster uses (file://, HDFS, S3A). */
   def readState(spark: SparkSession, statePath: String): DataFrame = {
     StoreFs.recover(spark, statePath) // heal a swap that died mid-replace
-    if (StoreFs.exists(spark, statePath)) spark.read.parquet(statePath)
+    if (StoreFs.exists(spark, statePath)) StoreFs.read(spark, statePath)
     else emptyState(spark)
   }
 
@@ -243,7 +243,7 @@ object Materialize {
                 "step — roll the raw source up time first, then up the relation")
             val v = d.valueCol.getOrElse(throw new IllegalArgumentException(
               s"root def ${d.name}: sourcePath is not another def's store, valueCol required"))
-            run(spark.read.option("mergeSchema", "true").parquet(d.sourcePath),
+            run(StoreFs.read(spark, d.sourcePath, mergeSchema = true),
               col(d.entityCol), col(d.tsCol),
               col(v), d.granularity, d.statePath, d.storePath)
               .map(day => truncDay(d.granularity, day)).distinct
@@ -273,12 +273,12 @@ object Materialize {
       // mergeSchema: the upstream store may have evolved (metric column
       // added mid-history) — schema must not depend on which footer
       // parquet samples.
-      val parent = spark.read.option("mergeSchema", "true").parquet(d.sourcePath)
+      val parent = StoreFs.read(spark, d.sourcePath, mergeSchema = true)
         .filter(to_date(date_trunc(d.granularity, col("p_date"))).isin(targetDays: _*))
         .drop("p_date")
       val rolled = TrendStore.reRollup(parent, d.granularity)
       val out = d.relationPath.fold(rolled) { rp =>
-        TrendStore.entityReRollup(rolled, spark.read.parquet(rp),
+        TrendStore.entityReRollup(rolled, StoreFs.read(spark, rp),
           d.relationChild, d.relationParent)
       }
       TrendStoreWriter.write(out, d.storePath)

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.graft.DriverFooterParquet
 
 /** Filesystem access for store/state management, through the Hadoop
   * `FileSystem` API so the same code runs on `file://` (tests),
@@ -45,6 +46,17 @@ object StoreFs {
     walk(p)
     s"$n-$bytes-$mt"
   }
+
+  /** Open a parquet table graft wrote: `spark.read.parquet` with
+    * Spark's `mergeSchema` option, one listing, and the schema read
+    * from up to 32 footers on the driver ([[DriverFooterParquet]]),
+    * not in a Spark job. Schemas, rows and errors are Spark's. */
+  def read(spark: SparkSession, path: String, mergeSchema: Boolean = false): DataFrame =
+    reader(spark, mergeSchema).load(path)
+
+  /** The reader behind [[read]], for multi-path or `basePath` opens. */
+  private[graft] def reader(spark: SparkSession, mergeSchema: Boolean): DataFrameReader =
+    spark.read.format(classOf[DriverFooterParquet].getName).option("mergeSchema", mergeSchema)
 
   /** Checked recursive delete: a no-op when `path` is absent, an
     * `IOException` when it exists and cannot be removed. */

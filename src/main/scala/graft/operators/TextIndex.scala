@@ -113,9 +113,16 @@ object TextIndex {
     * than `spark.sql.sources.parallelPartitionDiscovery.threshold`
     * (32) token directories — paid per query, for a 3-token read.
     * `basePath` keeps `token` a partition column; the explicit schema
-    * (data schema from one directory's footer + `token` STRING) pins
-    * the partition column's type, which inference over a numeric-only
-    * token subset would otherwise flip to int. Callers keep their
+    * (the data schema merged from the footers of every listed token
+    * directory, + `token` STRING) keeps a column that only a later
+    * token's files carry (NULL for the others), and pins the partition
+    * column's type, which inference over a numeric-only token subset
+    * would otherwise flip to int. The merge reads one footer per data
+    * file in the listed directories — tokens × files per directory,
+    * and each uncompacted `addBatch` adds a file to every token it
+    * touches — on the driver with no Spark job up to Spark's
+    * 32-footer driver cut-off ([[StoreFs.read]]), in Spark's inference
+    * job beyond it. Callers keep their
     * `isin` filter: it remains the correctness guard (an over-listed
     * directory can never leak rows) and the declared static pruning
     * in the plan. Absent tokens map to absent directories — the same
@@ -129,22 +136,19 @@ object TextIndex {
     val dirs = tokens.distinct
       .map(t => s"$tableDir/token=" + ExternalCatalogUtils.escapePathName(t))
       .filter(StoreFs.exists(spark, _))
-    def dataSchemaOf(dir: String) = spark.read.parquet(dir).schema
-    if (dirs.nonEmpty) {
-      val full = dataSchemaOf(dirs.head)
-        .add("token", org.apache.spark.sql.types.StringType)
-      spark.read.option("basePath", tableDir).schema(full).parquet(dirs: _*)
-    } else {
+    def reader = StoreFs.reader(spark, mergeSchema = true).option("basePath", tableDir)
+    def schemaOf(ds: Seq[String]) = org.apache.spark.sql.types.StructType(
+      reader.load(ds: _*).schema.filterNot(_.name == "token"))
+      .add("token", org.apache.spark.sql.types.StringType)
+    if (dirs.nonEmpty) reader.schema(schemaOf(dirs)).load(dirs: _*)
+    else {
       // no query token present: an empty frame with the layout's
-      // schema, taken from any existing token directory's footer
+      // schema, taken from any existing token directory's footers
       StoreFs.list(spark, tableDir)
         .find(_.getName.startsWith("token=")).map(_.toString) match {
-        case Some(sample) =>
-          val full = dataSchemaOf(sample)
-            .add("token", org.apache.spark.sql.types.StringType)
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](), full)
-        case None => spark.read.parquet(tableDir) // not token-partitioned
+        case Some(sample) => spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schemaOf(Seq(sample)))
+        case None => StoreFs.read(spark, tableDir) // not token-partitioned
       }
     }
   }
@@ -163,7 +167,7 @@ object TextIndex {
   /** Deduplicated document-length read. */
   def doclen(spark: SparkSession, path: String): DataFrame =
     dropDeleted(spark, path,
-      spark.read.parquet(s"$path/doclen")
+      StoreFs.read(spark, s"$path/doclen")
         .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
 
   /** Index-health report — the text twin of Similarity.indexStats:
@@ -184,10 +188,10 @@ object TextIndex {
     * longs — deterministic. */
   def health(spark: SparkSession, path: String): DataFrame = {
     requireTextIndex(spark, path, "health")
-    val nDocs = spark.read.parquet(s"$path/doclen")
+    val nDocs = StoreFs.read(spark, s"$path/doclen")
       .select(col("doc_id")).distinct().count()
     val nTomb = IndexLog.tombstoneCount(spark, path, "doc_id")
-    spark.read.parquet(s"$path/postings")
+    StoreFs.read(spark, s"$path/postings")
       .select(col("token"), col("doc_id")).distinct()
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_terms"), sum(col("n")).as("n_postings"),
@@ -328,7 +332,7 @@ object TextIndex {
     val hadTomb = IndexLog.hasTombstones(spark, path)
     StoreFs.rewrite(spark, s"$path/postings")(tmp =>
       dropDeleted(spark, path,
-          spark.read.parquet(s"$path/postings")
+          StoreFs.read(spark, s"$path/postings")
             .groupBy(col("token"), col("doc_id")).agg(max(col("tf")).as("tf")))
         .select(col("doc_id"), col("tf"), col("token"))
         .write.partitionBy("token").parquet(tmp))

@@ -66,7 +66,7 @@ object TrendStoreWriter {
     if (StoreFs.list(spark, path).isEmpty) { write(incoming, path); return }
     val dirtyDays = incoming.select(to_date(col("bucket")).as("p_date"))
       .distinct().collect().map(_.getDate(0))
-    val existing = spark.read.option("mergeSchema", "true").parquet(path)
+    val existing = StoreFs.read(spark, path, mergeSchema = true)
       .filter(col("p_date").isin(dirtyDays.toSeq: _*))
       .drop("p_date")
     // localCheckpoint materializes the survivors (bounded by the dirty
@@ -125,12 +125,14 @@ object TrendStoreWriter {
     * `mergeSchema` defaults ON so an evolved store (a metric added
     * mid-history via [[upsert]]) reads as the union schema, with NULL
     * for the new metric on pre-evolution days. The cost is footer
-    * reads (distributed, metadata-only), not data reads — acceptable
-    * even at 100 TB where day-partition counts are O(thousands). */
+    * reads, never data: one per data file merged, one footer off.
+    * [[StoreFs.read]] reads up to 32 of them on the driver with no
+    * Spark job; a store with more data files pays Spark's distributed
+    * footer-reading job, as `spark.read.parquet` does. */
   def read(spark: org.apache.spark.sql.SparkSession, path: String,
            from: Option[String] = None, to: Option[String] = None,
            mergeSchema: Boolean = true): DataFrame = {
-    val df = spark.read.option("mergeSchema", mergeSchema.toString).parquet(path)
+    val df = StoreFs.read(spark, path, mergeSchema)
     val lo = from.map(d => col("p_date") >= lit(d)).getOrElse(lit(true))
     val hi = to.map(d => col("p_date") <= lit(d)).getOrElse(lit(true))
     df.filter(lo && hi)

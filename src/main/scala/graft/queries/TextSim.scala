@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{BigramsGenerator, RegexTokenStatsExpr, TextStatsExpr, TokenCountExpr, TokenUniqExpr, TokensGenerator}
 import graft.multimodal.Multimodal
-import graft.operators.{Dedup, Sampling, TextIndex}
+import graft.operators.{Dedup, Sampling, StoreFs, TextIndex}
 import graft.similarity.Similarity
 import graft.sources.TableCatalog
 
@@ -967,7 +967,7 @@ object TextSim {
           .groupBy("token").agg(count(lit(1)).as("cf"))
           .write.parquet(p)
       }
-      rarityScore(TableCatalog(s, dir).documents, s.read.parquet(freqPath))
+      rarityScore(TableCatalog(s, dir).documents, StoreFs.read(s, freqPath))
         .orderBy(col("doc_id"))
     },
 
@@ -1123,16 +1123,16 @@ object TextSim {
       // body — the export below therefore reads the recovered tables.
       val stats = Similarity.indexStats(s, idx)
       s18ExportOnce.computeIfAbsent(
-          s"$dir#$idx#${graft.operators.StoreFs.fingerprint(s, idx)}", { _ =>
+          s"$dir#$idx#${StoreFs.fingerprint(s, idx)}", { _ =>
         val key = emb.agg(count(lit(1)).as("nc"),
           sum(col("vec_id")).as("sv")).head()
         val (nc, sv) = (key.getLong(0), key.getLong(1))
         val ex = s"$s18ExportRoot/k=${nc}_$sv"
-        s.read.parquet(s"$idx/cells")
+        StoreFs.read(s, s"$idx/cells")
           .select(col("n_id"), col("cell").cast("long").as("cell"),
             lit(nc).as("n_corpus"), lit(sv).as("vec_sum"))
           .write.mode("overwrite").parquet(s"$ex/cells")
-        s.read.parquet(s"$idx/centroids")
+        StoreFs.read(s, s"$idx/centroids")
           .select(col("cell").cast("long").as("cell"),
             lit(nc).as("n_corpus"), lit(sv).as("vec_sum"))
           .write.mode("overwrite").parquet(s"$ex/centroids")

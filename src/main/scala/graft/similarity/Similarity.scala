@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExpressions
-import graft.operators.IndexLog
+import graft.operators.{IndexLog, StoreFs}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -58,7 +58,7 @@ object Similarity {
 
   private def cachedMeta[T <: AnyRef](spark: SparkSession, path: String)
                                      (load: => T): T = {
-    val fp = graft.operators.StoreFs.fingerprint(spark, path)
+    val fp = StoreFs.fingerprint(spark, path)
     metaCache.compute(path, (_, cur) =>
       if (cur != null && cur._1 == fp) cur else (fp, load))._2.asInstanceOf[T]
   }
@@ -67,14 +67,14 @@ object Similarity {
   private def loadCentroidRows(spark: SparkSession,
                                indexPath: String): Array[org.apache.spark.sql.Row] =
     cachedMeta(spark, s"$indexPath/centroids") {
-      spark.read.parquet(s"$indexPath/centroids").orderBy(col("cell")).collect()
+      StoreFs.read(spark, s"$indexPath/centroids").orderBy(col("cell")).collect()
     }
 
   /** PQ codebooks `[m][nCodes][subDim]`, via [[cachedMeta]]. */
   private def loadCodebooks(spark: SparkSession,
                             indexPath: String): Array[Array[Array[Double]]] =
     cachedMeta(spark, s"$indexPath/codebooks") {
-      val rows = spark.read.parquet(s"$indexPath/codebooks")
+      val rows = StoreFs.read(spark, s"$indexPath/codebooks")
         .orderBy(col("sub"), col("code")).collect()
       val m = rows.map(_.getInt(0)).max + 1
       val nCodes = rows.map(_.getInt(1)).max + 1
@@ -454,7 +454,7 @@ object Similarity {
     val (probed, probeCells) = collectProbed(
       probeQueries(queries, qId, vecCol, cents, nprobe))
     val corpusCells = dropTombstones(spark, indexPath,
-      allowedFilter(spark.read.parquet(s"$indexPath/cells")
+      allowedFilter(StoreFs.read(spark, s"$indexPath/cells")
         .filter(col("cell").isin(probeCells.toSeq: _*)), allowed))
     ivfScore(corpusCells, probed, k)
   }
@@ -505,7 +505,7 @@ object Similarity {
         s"slice(array_sort(transform(__scores, (s, i) -> struct(-s AS d, i + 1 AS c))), 1, $maxNp).c"))
         .as(Seq("__pp", "cell"))))
     val corpusCells = dropTombstones(spark, indexPath,
-      spark.read.parquet(s"$indexPath/cells")
+      StoreFs.read(spark, s"$indexPath/cells")
         .filter(col("cell").isin(probeCells.toSeq: _*)))
     val points = typedLit(nprobes.distinct)
     val scored = corpusCells
@@ -545,7 +545,7 @@ object Similarity {
   private def recoverIndex(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String): Unit =
     Seq("codes", "cells", "vectors").foreach(t =>
-      graft.operators.StoreFs.recover(spark, s"$indexPath/$t"))
+      StoreFs.recover(spark, s"$indexPath/$t"))
 
   /** Hide [[annDelete]]d ids from a candidate table, BEFORE any top-k
     * cut so a deleted vector can neither rank nor crowd the list. */
@@ -589,7 +589,7 @@ object Similarity {
     val nTomb = IndexLog.tombstoneCount(spark, indexPath, "n_id")
     val base = layout match {
       case "pq" =>
-        spark.read.parquet(dataPath).agg(count(lit(1)).as("n_vectors"))
+        StoreFs.read(spark, dataPath).agg(count(lit(1)).as("n_vectors"))
           .select(lit(layout).as("layout"),
             lit(null).cast("long").as("n_cells_declared"),
             lit(null).cast("long").as("n_cells_occupied"),
@@ -599,8 +599,8 @@ object Similarity {
             lit(null).cast("double").as("mean_cell"),
             lit(null).cast("double").as("imbalance"))
       case _ =>
-        val declared = spark.read.parquet(s"$indexPath/centroids").count()
-        spark.read.parquet(dataPath)
+        val declared = StoreFs.read(spark, s"$indexPath/centroids").count()
+        StoreFs.read(spark, dataPath)
           .groupBy(col("cell")).agg(count(lit(1)).as("n"))
           .agg(count(lit(1)).as("occ"), sum(col("n")).as("n_vectors"),
             max(col("n")).as("max_cell"))
@@ -855,8 +855,8 @@ object Similarity {
     recoverIndex(spark, indexPath) // heal a torn compaction swap
     val books = loadCodebooks(spark, indexPath)
     pqScore(dropTombstones(spark, indexPath,
-        allowedFilter(spark.read.parquet(s"$indexPath/codes"), allowed)),
-      spark.read.parquet(s"$indexPath/vectors"),
+        allowedFilter(StoreFs.read(spark, s"$indexPath/codes"), allowed)),
+      StoreFs.read(spark, s"$indexPath/vectors"),
       queries, qId, vecCol, books, k, rerank,
       loadRotation(spark, indexPath))
   }
@@ -1096,7 +1096,7 @@ object Similarity {
           else lit(0.0))
         .select(col("q_id"), col("cell"), col("__celldot")))
     val codes = dropTombstones(spark, indexPath,
-      allowedFilter(spark.read.parquet(s"$indexPath/codes")
+      allowedFilter(StoreFs.read(spark, s"$indexPath/codes")
         .filter(col("cell").isin(probeCells.toSeq: _*)), allowed))
     // A rotated (OPQ-lite) index codes Rv̂ (or R·residual): only the
     // LUT side rotates to match — probe, cell-dot and re-rank all
@@ -1110,7 +1110,7 @@ object Similarity {
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
         (col("__celldot") + adcScore(books.length)).as("__adc"))
-    pqRerank(spark.read.parquet(s"$indexPath/vectors"),
+    pqRerank(StoreFs.read(spark, s"$indexPath/vectors"),
       queries, qId, vecCol, approx, k, rerank)
   }
 
@@ -1206,7 +1206,7 @@ object Similarity {
     import spark.implicits._
     val path = s"$indexPath/rotation"
     rot match {
-      case None => graft.operators.StoreFs.delete(spark, path)
+      case None => StoreFs.delete(spark, path)
       case Some(r) => r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }
         .toSeq.toDF("i", "component")
         .coalesce(1).write.mode("overwrite").parquet(path)
@@ -1216,8 +1216,8 @@ object Similarity {
   private def loadRotation(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String): Option[Array[Array[Double]]] =
     cachedMeta(spark, s"$indexPath/rotation") {
-      if (!graft.operators.StoreFs.exists(spark, s"$indexPath/rotation")) None
-      else Some(spark.read.parquet(s"$indexPath/rotation")
+      if (!StoreFs.exists(spark, s"$indexPath/rotation")) None
+      else Some(StoreFs.read(spark, s"$indexPath/rotation")
         .orderBy(col("i")).collect()
         .map(_.getSeq[Double](1).toArray))
     }

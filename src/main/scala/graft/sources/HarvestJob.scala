@@ -80,7 +80,7 @@ object HarvestJob {
   private def processedFiles(spark: SparkSession, statePath: String): Set[String] = {
     StoreFs.recover(spark, statePath) // heal a swap that died mid-replace
     if (StoreFs.exists(spark, statePath))
-      spark.read.parquet(statePath).select("file").collect().map(_.getString(0)).toSet
+      StoreFs.read(spark, statePath).select("file").collect().map(_.getString(0)).toSet
     else Set.empty
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{Dedup, IndexLog}
+import graft.operators.{Dedup, IndexLog, StoreFs}
 
 /** Continuous NEAR-duplicate deduplication against a persisted LSH
   * index — the streaming twin of `Dedup.nearDedupIncrementalStaged`,
@@ -72,7 +72,7 @@ object NearStreamDedup {
         staged.commit()
       } else {
         // survivors already persisted; never re-probe (self-drop risk)
-        Dedup.nearIndexAppend(spark, spark.read.parquet(out), idCol, textCol,
+        Dedup.nearIndexAppend(spark, StoreFs.read(spark, out), idCol, textCol,
           indexPath, k, numPerm, bands)
       }
     }

@@ -61,7 +61,7 @@ object SetStream {
       else {
         val dirtyDays = delta.select(to_date(col("bucket")).as("p_date"))
           .distinct().collect().map(_.getDate(0))
-        val existing = spark.read.parquet(storePath)
+        val existing = StoreFs.read(spark, storePath)
           .filter(col("p_date").isin(dirtyDays.toSeq: _*))
           .drop("p_date")
           .withColumnRenamed("elements", "__old")

@@ -1,8 +1,16 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{classic, Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.ThreadUtils
 
 /** Classic-mode Column ↔ catalyst Expression bridge. Spark 4 removed
   * the public `new Column(expr)` constructor (Connect refactor); the
@@ -51,4 +59,38 @@ object ColumnBridge {
           "may share checkpoint blocks with sibling datasets — unpersist " +
           "the Dataset localCheckpoint() returned instead.")
     }
+}
+
+/** Parquet whose schema inference reads the footers Spark's
+  * (`ParquetUtils.inferSchema`) would — one, or all with `mergeSchema`
+  * — on the driver in a bounded 8-thread pool, not in a Spark job.
+  * Past `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+  * footers, Spark's own driver-side cut-off, or with none, Spark's
+  * inference runs unchanged. Opened by `graft.operators.StoreFs`. */
+class DriverFooterParquet extends ParquetFileFormat {
+  override def inferSchema(session: SparkSession,
+                           options: Map[String, String],
+                           files: Seq[FileStatus]): Option[StructType] = {
+    val state = session.asInstanceOf[classic.SparkSession].sessionState
+    val conf = state.conf
+    // the files Spark's `ParquetUtils.inferSchema` would read
+    val sorted = files.sortBy(_.getPath.toString)
+    def named(n: String) = sorted.filter(_.getPath.getName == n)
+    val (metadata, common) = (named(PARQUET_METADATA_FILE), named(PARQUET_COMMON_METADATA_FILE))
+    val data = sorted.filterNot(f => metadata.contains(f) || common.contains(f))
+    val touch =
+      if (new ParquetOptions(options, conf).mergeSchema)
+        (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++ metadata ++ common
+      else (common ++ metadata ++ data).take(1)
+    if (touch.isEmpty || touch.length > conf.parallelPartitionDiscoveryThreshold)
+      return super.inferSchema(session, options, files)
+    val hadoop = state.newHadoopConfWithOptions(options)
+    val converter = new ParquetToSparkSchemaConverter(conf)
+    def one(f: FileStatus): StructType = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(f.getPath,
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoop), SKIP_ROW_GROUPS)),
+      converter)
+    val schemas = if (touch.size == 1) touch.map(one) else ThreadUtils.parmap(touch, "graft-footers", 8)(one)
+    Some(schemas.reduceLeft(_.merge(_, conf.caseSensitiveAnalysis)))
+  }
 }

@@ -362,4 +362,19 @@ class TextIndexSpec extends SparkSpec {
       files.forall(f => f.contains("token=spark") || f.contains("token=42")),
       s"pruned read listed beyond its token dirs: ${files.mkString(",")}")
   }
+
+  test("tokenPrunedRead merges every listed token directory's footers: a later token's column survives") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_text_merge").toString + "/idx"
+    TextIndex.build(Seq((1L, "alpha beta"), (2L, "beta")).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    // a later token's directory gains a nullable column the first lacks
+    Seq((3L, 1L, "x")).toDF("doc_id", "tf", "extra")
+      .write.mode("append").parquet(s"$dir/postings/token=beta")
+    val read = TextIndex.tokenPrunedRead(spark, s"$dir/postings", Seq("alpha", "beta"))
+    assert(read.columns.toSeq === Seq("doc_id", "tf", "extra", "token"))
+    val rows = read.select("token", "doc_id", "extra").as[(String, Long, Option[String])]
+      .collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(rows === Seq(("alpha", 1L, None), ("beta", 1L, None), ("beta", 2L, None),
+      ("beta", 3L, Some("x"))))
+  }
 }
